@@ -134,14 +134,6 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
                       F.size("shingle_arr").cast("long").alias("set_size")))
 
 
-def signature_array(sigs: DataFrame, id_col: str = "doc_id",
-                    n_hashes: int = 16) -> DataFrame:
-    """Signature columns packed into array<bigint> (presentation form)."""
-    return sigs.select(F.col(id_col),
-                       F.array(*[F.col(f"s{i}") for i in range(n_hashes)])
-                        .alias("signature"))
-
-
 def signature_string(sigs: DataFrame, id_col: str = "doc_id",
                      n_hashes: int = 16) -> DataFrame:
     """Signature packed as a '|'-joined string — the registered

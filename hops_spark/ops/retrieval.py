@@ -32,14 +32,6 @@ K1 = 1.2
 B = 0.75
 
 
-def doc_lengths(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """(doc, dl): token count per document (whitespace tokenizer —
-    map-only, no explode shuffle)."""
-    return docs.select(F.col(id_col),
-                       F.size(words(text_col)).cast("long").alias("dl"))
-
-
 def doc_term_stats(docs: DataFrame, terms: list[str], id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """(doc, dl, tf_0..tf_k): document length AND per-query-term counts
@@ -704,6 +696,17 @@ def maxsim_topk(docs: DataFrame, query_terms: list[str], k: int = 15,
     from hops_spark.ops.similarity import _py_fold_norm, cosine_pre, norm
     from hops_spark.ops.text import words
 
+    # query vectors first: pure driver-side work, so an empty or
+    # all-zero-norm query list returns before any corpus job runs
+    qvecs = [(i, u) for i, u in
+             ((i, _py_term_vector(t, dim)) for i, t in
+              enumerate(query_terms))
+             if u is not None]
+    if not qvecs:     # every query term hashed to the zero vector —
+        # same empty result (and schema) the cross-join shape produced
+        return (docs.select(F.col(id_col))
+                    .limit(0)
+                    .withColumn("maxsim", F.lit(0.0)))
     dterms = (docs.select(F.col(id_col), F.explode(words(text_col))
                            .alias("term"))
                   .distinct()
@@ -719,24 +722,15 @@ def maxsim_topk(docs: DataFrame, query_terms: list[str], k: int = 15,
     tv = (term_vectors(dterms.select("term").distinct(), "term", dim)
           .filter(nonzero)
           .withColumn("_ntv", norm(F.col("v"))))
-    qvecs = [(i, u) for i, u in
-             ((i, _py_term_vector(t, dim)) for i, t in
-              enumerate(query_terms))
-             if u is not None]
-    if not qvecs:     # every query term hashed to the zero vector —
-        # same empty result (and schema) the cross-join shape produced
-        return (dterms.select(F.col(id_col))
-                      .limit(0)
-                      .withColumn("maxsim", F.lit(0.0)))
     # round(dot/(norms), 6) per (term, query term) — the identical
     # cosine_pre expression the pair projection evaluated, now with
-    # the query side a literal; values are unchanged bit for bit
-    for i, u in qvecs:
-        tv = tv.withColumn(f"_c{i}", F.round(
-            cosine_pre(F.col("v"), lit_array(u, "double"),
-                       F.col("_ntv"), F.lit(_py_fold_norm(u))), 6))
-    sims = dterms.join(
-        tv.select("term", *[f"_c{i}" for i, _ in qvecs]), "term")
+    # the query side a literal; values are unchanged bit for bit. One
+    # select: a withColumn per term re-analyzes the growing projection
+    tv = tv.select("term", *[F.round(
+        cosine_pre(F.col("v"), lit_array(u, "double"),
+                   F.col("_ntv"), F.lit(_py_fold_norm(u))), 6)
+        .alias(f"_c{i}") for i, u in qvecs])
+    sims = dterms.join(tv, "term")
     piv = sims.groupBy(id_col).agg(
         *[F.max(f"_c{i}").alias(f"c{i}") for i, _ in qvecs])
     have = {i for i, _ in qvecs}

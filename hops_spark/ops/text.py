@@ -57,13 +57,6 @@ def shingles(text: Column | str, n: int = 3) -> Column:
                   ).otherwise(F.array().cast("array<string>"))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    w = words(text)
-    sw = F.array(*[F.lit(s) for s in STOPWORDS[lang]])
-    n_sw = F.size(F.filter(w, lambda t: F.array_contains(sw, t)))
-    return n_sw / F.greatest(F.size(w), F.lit(1))
-
-
 PPM = 1_000_000  # ratios are exact integer parts-per-million: floating-point
 # rounding at decimal half-boundaries differs between engines, integer
 # division does not — so every ratio here is `div(k * 1e6, n)`.

@@ -41,6 +41,27 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 .withColumn("len", F.length("w").cast("int")))
 
 
+def gram_counts(wc: DataFrame, max_piece: int,
+                form=lambda n, i: F.substring("w", i, n)) -> DataFrame:
+    """(piece, cnt): occurrence-weighted counts of every gram of the
+    word histogram ``wc`` (w, n_occ, len) — each substring of length
+    n = 1..min(len, max_piece) at each start i = 1..len - n + 1, named
+    by ``form(n, i)``. ONE generator enumerates all (n, i) pairs: a
+    per-n loop of ``unionByName`` branches emits the same multiset but
+    scans the histogram once per branch and makes Catalyst analyze and
+    optimize every copy. ``sequence(1, 0)`` counts DOWN, so empty
+    words are dropped explicitly (the shingle_arrays guard)."""
+    L = F.col("len")
+    grams = F.flatten(F.transform(
+        F.sequence(F.lit(1), F.least(L, F.lit(max_piece))),
+        lambda n: F.transform(F.sequence(F.lit(1), L - n + 1),
+                              lambda i: form(n, i))))
+    return (wc.select(F.explode(F.when(L >= 1, grams)).alias("piece"),
+                      "n_occ")
+              .groupBy("piece")
+              .agg(F.sum("n_occ").cast("long").alias("cnt")))
+
+
 def piece_table(wc: DataFrame, top_k: int = TOP_K,
                 min_count: int = MIN_COUNT,
                 max_piece: int = MAX_PIECE) -> DataFrame:
@@ -48,19 +69,9 @@ def piece_table(wc: DataFrame, top_k: int = TOP_K,
     2..max_piece-grams by occurrence-weighted count (ties to the
     lexicographically smaller gram); cost is the add-one-smoothed
     negative log prob in exact integer micro-nats over the SELECTED
-    inventory (N = Σ cnt, V = |pieces|)."""
-    grams = None
-    for n in range(1, max_piece + 1):
-        g = (wc.filter(F.col("len") >= n)
-               .select("w", "n_occ",
-                       F.explode(F.sequence(F.lit(1),
-                                            F.col("len") - n + 1))
-                        .alias("i"))
-               .select(F.expr(f"substring(w, i, {n})").alias("piece"),
-                       "n_occ"))
-        grams = g if grams is None else grams.unionByName(g)
-    cnts = grams.groupBy("piece").agg(F.sum("n_occ").cast("long")
-                                       .alias("cnt"))
+    inventory (N = Σ cnt, V = |pieces|). The gram counts come from
+    one ``gram_counts`` generator over the histogram ``wc``."""
+    cnts = gram_counts(wc, max_piece)
     chars = cnts.filter(F.length("piece") == 1)
     multi = (cnts.filter((F.length("piece") > 1)
                          & (F.col("cnt") >= min_count))

@@ -53,24 +53,15 @@ def wp_piece_table(wc: DataFrame, top_k: int = TOP_K,
     kept unconditionally (the totality guarantee); multi-character
     forms keep the top-``top_k`` by weighted count, ties to the
     lexicographically smaller piece. Everything here is vocab-bounded:
-    the gram explode runs over distinct words, not the token stream."""
-    grams = None
-    for n in range(1, max_piece + 1):
-        init = (wc.filter(F.col("len") >= n)
-                  .select(F.expr(f"substring(w, 1, {n})").alias("piece"),
-                          "n_occ"))
-        cont = (wc.filter(F.col("len") >= n + 1)
-                  .select("w", "n_occ",
-                          F.explode(F.sequence(F.lit(2),
-                                               F.col("len") - n + 1))
-                           .alias("i"))
-                  .select(F.expr(f"concat('{CONT}', substring(w, i, {n}))")
-                           .alias("piece"),
-                          "n_occ"))
-        for g in (init, cont):
-            grams = g if grams is None else grams.unionByName(g)
-    cnts = grams.groupBy("piece").agg(F.sum("n_occ").cast("long")
-                                       .alias("cnt"))
+    both forms come from one ``gram_counts`` generator over distinct
+    words, not the token stream."""
+    from hops_spark.ops.unigram import gram_counts
+
+    def form(n, i):
+        g = F.substring("w", i, n)
+        return F.when(i == 1, g).otherwise(F.concat(F.lit(CONT), g))
+
+    cnts = gram_counts(wc, max_piece, form)
     core_len = (F.length("piece")
                 - F.when(F.col("piece").startswith(CONT), F.lit(2))
                    .otherwise(F.lit(0)))

@@ -2650,7 +2650,11 @@ def tokenizer_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate over the cached histogram: routing the heavy chained
     # replace through the Python stage's output measured 15-20%
     # slower at sf1 (r13 A/B). Integer sums, so regrouping changes
-    # nothing; the oracle SQL is untouched.
+    # nothing; the oracle SQL is untouched. Each piece table counts
+    # all its grams with ONE generator per scan of the cached
+    # histogram (ops/unigram.gram_counts), so the inventories cost a
+    # few small stages, not one histogram scan per gram length and
+    # piece form.
     fused = fused_piece_counts(wc, wp_piece_table(wc), piece_table(wc))
     row = fused.agg(
         F.sum("n_occ").cast("long").alias("t_ws"),

@@ -64,14 +64,6 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
                     "n_events", "sum_value"))
 
 
-def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-            .agg(F.count("*").alias("n_events"),
-                 F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.col("w.start").alias("window_start"), "n_events", "sum_value"))
-
-
 def session_aggregate(events: DataFrame, gap: str = "30 minutes",
                       watermark: str = "1 hour") -> DataFrame:
     """Streaming sessionization via session_window — the stateful

@@ -304,3 +304,21 @@ def test_bpe_pair_counts_single_shuffle(spark, sf_dir):
         assert plan.count("Exchange") <= 2    # vocab agg + pair agg
     finally:
         vocab.unpersist()
+
+
+def test_plan_audit_counts_union_children(spark):
+    """tools/plan_audit.union_children totals the children of every
+    Union node: a 3-way union and a 2-way union under a join."""
+    import os
+    import sys
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools"))
+    from plan_audit import union_children
+
+    three = spark.range(3).union(spark.range(4)).union(spark.range(5))
+    two = spark.range(2).union(spark.range(6)).withColumnRenamed("id", "k")
+    df = three.join(two, three["id"] == two["k"])
+    df.collect()
+    assert union_children(_plan(df).split("== Initial Plan ==")[0]) == 5
+    assert union_children(_plan(spark.range(3))) == 0

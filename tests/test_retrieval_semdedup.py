@@ -46,6 +46,27 @@ def test_bm25_topk_limit_and_tiebreak(spark):
     assert got == [0, 1, 2, 3]              # equal scores -> id order
 
 
+def test_maxsim_empty_query_runs_no_job(spark):
+    """An empty or all-zero-norm query list returns maxsim_topk's empty
+    (doc_id, maxsim) frame without running any corpus job."""
+    from itertools import product
+
+    zero = next(t for t in map("".join, product("abcdefgh", repeat=4))
+                if R._py_term_vector(t, R.MSIM_DIM) is None)
+    docs = _docs(spark, [(1, "spark merge"), (2, f"{zero} vector")])
+    sc = spark.sparkContext
+    for query in ([], [zero]):
+        sc.setJobGroup("maxsim-empty", "maxsim empty-query test")
+        try:
+            out = R.maxsim_topk(docs, query)
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup("maxsim-empty")) \
+            == [], query
+        assert out.columns == ["doc_id", "maxsim"]
+        assert out.collect() == []
+
+
 def _vec(*xs):
     return [float(x) for x in xs]
 

@@ -2,7 +2,9 @@
 """Physical-plan audit (window by default, --all for every query): one row per
 query with the plan features the 100 TB design rules care about —
 exchange count, broadcast vs sort-merge joins, whole-stage-codegen
-spans, parquet pushdown. Writes a markdown table (default PLANS.md).
+spans, parquet pushdown, and the total number of Union children (so a
+loop-built union fan-out shows here, not first in a profile). Writes a
+markdown table (default PLANS.md).
 
 ``--lint`` additionally FAILS (exit 1) on plan antipatterns:
 - a CartesianProduct anywhere (the only sanctioned cross joins ride a
@@ -19,6 +21,7 @@ Usage: python tools/plan_audit.py [sf_dir] [out_md] [--all] [--lint]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -66,6 +69,23 @@ _BOUNDED_SINGLE_PARTITION_OK = {
 }
 
 
+def union_children(plan: str) -> int:
+    """Total children of every Union node in a plan's tree string. A
+    node's children are the lines right below it whose node text starts
+    3 columns deeper (after a ``:- `` or ``+- `` branch marker)."""
+    lines = plan.splitlines()
+    starts = [len(ln) - len(ln.lstrip(" :+-|")) for ln in lines]
+    total = 0
+    for i, ln in enumerate(lines):
+        if not re.sub(r"^\*\(\d+\) ", "", ln[starts[i]:]).startswith("Union"):
+            continue
+        for j in range(i + 1, len(lines)):
+            if starts[j] <= starts[i]:
+                break
+            total += starts[j] == starts[i] + 3
+    return total
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
@@ -92,7 +112,7 @@ def main() -> None:
             plan = plan.split("== Initial Plan ==")[0]
             fmt = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
         except Exception as e:  # noqa: BLE001
-            rows.append((name, f"ERROR: {e}", "", "", "", "", ""))
+            rows.append((name, f"ERROR: {e}", "", "", "", "", "", ""))
             if lint:
                 violations.append(f"{name}: ERROR {e}")
             continue
@@ -120,11 +140,12 @@ def main() -> None:
             plan.count("BroadcastHashJoin"),
             plan.count("SortMergeJoin"),
             # Spark 4 marks codegen stages as "*(n)" in toString
-            len(set(__import__("re").findall(r"\*\((\d+)\)", plan))),
+            len(set(re.findall(r"\*\((\d+)\)", plan))),
             "yes" if "PushedFilters: [" in fmt
                      and "PushedFilters: []" not in fmt else "-",
             "yes" if "PythonUDF" in plan or "MapInPandas" in plan
                      or "ArrowEval" in plan else "-",
+            union_children(plan),
         ))
 
     scope = (f"all {len(names)} registered queries"
@@ -136,13 +157,15 @@ def main() -> None:
                 "EXCLUDE broadcasts; codegen = distinct whole-stage "
                 "spans; pushdown = non-empty parquet PushedFilters; "
                 "python = Arrow-batched pandas stage present (never "
-                "row-at-a-time). Queries are EXECUTED first, so counts are "
+                "row-at-a-time); unions = total children of all Union "
+                "nodes. Queries are EXECUTED first, so counts are "
                 "the final adaptive (AQE) plan, with cached "
                 "contractually-small intermediates appearing as "
                 "in-memory scans rather than their full lineage.\n\n")
         f.write("| query | shuffle exchanges | broadcast joins | "
-                "sort-merge joins | codegen spans | pushdown | python |\n")
-        f.write("|---|---|---|---|---|---|---|\n")
+                "sort-merge joins | codegen spans | pushdown | python | "
+                "unions |\n")
+        f.write("|---|---|---|---|---|---|---|---|\n")
         for r in rows:
             f.write("| " + " | ".join(str(x) for x in r) + " |\n")
     print(f"wrote {out_md} ({len(rows)} queries)")
