@@ -14,71 +14,68 @@ Beyond", SoCC 2014): alternate
   small-star(u): connect every neighbor v < u, and u itself, to
                  m = min of those
 
-until the edge set is stable; the result is a forest of stars whose root
-is each component's minimum node id. Converges in O(log n) rounds (vs
+until the edge set is a min-rooted star forest: every node is a root
+(no parent) or a leaf (one parent, no children). Edges are kept
+oriented child -> parent with child > parent, so each star's root is
+its component's minimum node id. Converges in O(log n) rounds (vs
 O(diameter) for naive label propagation — the difference between 20 and
-20,000 rounds on a chain-shaped component), and every round is a single
-groupBy shuffle over the current edge set.
+20,000 rounds on a chain-shaped component), and every round is two
+groupBy shuffles over the current edge set.
 
 Scale notes (100 TB):
-- State per round is the edge set only (2 bigints/edge), never an
-  adjacency matrix; per-group memory is one neighborhood (collect_set),
+- State per round is the edge set only, held as per-node parent and
+  child lists (2 bigints/edge), never an adjacency matrix; per-group memory is one neighborhood (collect_set),
   which for dedup graphs is bounded by the pair-emitters' bucket caps
   upstream (ops/dedup.py max_bucket).
-- Each round ends with localCheckpoint(eager): lineage would otherwise
-  double per round and the DAG submit itself becomes the bottleneck
-  (the standard iterative-algorithm idiom; checkpoint files stay in
-  executor storage, no driver collect).
-- The convergence probe is a 2-long aggregate (count + hash-sum), not a
-  DataFrame comparison.
+- Each round checkpoints its adjacency with localCheckpoint(eager):
+  lineage would otherwise double per round and the DAG submit itself
+  becomes the bottleneck (the standard iterative-algorithm idiom;
+  checkpoint files stay in executor storage, no driver collect).
+- The star-forest test is a max observed (Dataset.observe) on the
+  adjacency while it is checkpointed: no probe job, and no extra round
+  to confirm the fixpoint. Round i's checkpoint runs under the job
+  description ``connected_components:round<i>``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def _symmetric(edges: DataFrame) -> DataFrame:
-    """Both directions of the undirected edge set, self-loops dropped."""
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    rev = edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-    return fwd.union(rev).filter(F.col("u") != F.col("v"))
+def _adjacency(cur: DataFrame) -> DataFrame:
+    """Per node of the oriented edge set ``cur`` (child src > parent
+    dst): ``ups`` = its parents, ``downs`` = its children. One explode
+    reads ``cur`` once; a union of the two directions would read an
+    un-checkpointed lineage twice."""
+    both = F.explode(F.array(
+        F.struct(F.col("src").alias("node"), F.col("dst").alias("up"),
+                 F.lit(None).cast("long").alias("down")),
+        F.struct(F.col("dst").alias("node"), F.lit(None).cast("long").alias("up"),
+                 F.col("src").alias("down"))))
+    return (cur.select(both.alias("e")).select("e.*")
+               .groupBy("node")
+               .agg(F.collect_set("up").alias("ups"),
+                    F.collect_set("down").alias("downs")))
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to min(G(u) + {u})."""
-    adj = (_symmetric(edges).groupBy("u")
-                            .agg(F.collect_set("v").alias("vs")))
-    m = F.least(F.col("u"), F.array_min("vs"))
-    bigger = F.filter("vs", lambda v: v > F.col("u"))
-    return (adj.select(F.explode(bigger).alias("src"), m.alias("dst"))
-               .filter(F.col("src") != F.col("dst"))
-               .distinct())
+def _large_star(adj: DataFrame) -> DataFrame:
+    """Connect every strictly-larger neighbor of u to min(G(u) + {u});
+    map-only over the adjacency."""
+    nbrs = F.array_union("ups", "downs")
+    m = F.least(F.col("node"), F.array_min(nbrs))
+    bigger = F.filter(nbrs, lambda v: v > F.col("node"))
+    return adj.select(F.explode(bigger).alias("src"), m.alias("dst"))
 
 
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-smaller neighbor of u, and u, to their min."""
-    adj = (_symmetric(edges).groupBy("u")
-                            .agg(F.collect_set("v").alias("vs")))
-    smaller = F.filter("vs", lambda v: v < F.col("u"))
-    m = F.least(F.col("u"), F.array_min(smaller))
-    nodes = F.array_union(smaller, F.array(F.col("u")))
-    return (adj.select(F.explode(nodes).alias("src"), m.alias("dst"))
-               .filter(F.col("src") != F.col("dst"))
-               .distinct())
-
-
-def _signature(edges: DataFrame) -> tuple[int, int]:
-    """Cheap order-insensitive edge-set fingerprint for the convergence
-    probe (count + XOR of per-edge hashes; XOR, not sum — a sum of
-    64-bit hashes overflows long under ANSI mode — and collision-safe
-    enough for a fixpoint check that only compares consecutive rounds)."""
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _small_star(cur: DataFrame) -> DataFrame:
+    """Connect every strictly-smaller neighbor of u, and u, to their min.
+    ``cur`` is oriented, so u's smaller neighbors are its parents."""
+    ups = cur.groupBy("src").agg(F.collect_set("dst").alias("ups"))
+    nodes = F.array_union("ups", F.array(F.col("src")))
+    return (ups.select(F.explode(nodes).alias("src"),
+                       F.array_min("ups").alias("dst"))
+               .filter(F.col("src") != F.col("dst")))
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -86,37 +83,39 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     """Labels every node of the undirected graph ``edges`` with its
     component's minimum node id. Returns (node, component) — one row per
     non-isolated node; callers left-join and coalesce to label
-    singletons. Raises if the fixpoint is not reached in ``max_iter``
-    alternating rounds (O(log n) expected — 30 covers any realistic n).
+    singletons. Raises if the edge set is not a star forest after
+    ``max_iter`` alternating rounds (O(log n) expected — 30 covers any
+    realistic n).
     """
-    cur = (edges.select(F.col(src).cast("long").alias("src"),
-                        F.col(dst).cast("long").alias("dst"))
-                .filter(F.col("src") != F.col("dst"))
-                .distinct()
-                .localCheckpoint(eager=True))
-    prev_sig = None
-    # One star-pair per checkpoint + probe. r13 measured the batched
-    # alternative (two star-pairs per round-trip, halving probes):
-    # under AQE every exchange materializes as its own job, so batching
-    # SAVES no jobs and ADDS the wasted no-op stages past the fixpoint
-    # — 19 -> 27 jobs, 2.6 -> 4.2 s on the sf0.1 minhash graph.
-    # Reverted; the per-round signature probe on the checkpointed edge
-    # set is the cheap part.
-    for _ in range(max_iter):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-        sig = _signature(cur)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    # Converged edge set is a star forest (child -> root). Roots label
-    # themselves; min-agg guards the (impossible at fixpoint) case of a
-    # node retaining two parents.
-    labels = (cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-                 .union(cur.select(F.col("dst").alias("node"),
-                                   F.col("dst").alias("component"))))
-    return labels.groupBy("node").agg(F.min("component").alias("component"))
+    a, b = F.col(src).cast("long"), F.col(dst).cast("long")
+    cur = (edges.filter(a != b)
+                .select(F.greatest(a, b).alias("src"), F.least(a, b).alias("dst")))
+    # Stop at the first min-rooted star forest: every node has no
+    # parent (a root) or one parent and no children (a leaf). Large-star
+    # and small-star keep every node in its component and emit only
+    # edges to a strictly smaller node, and a min-rooted star forest is
+    # their fixpoint, so its labels are the fixpoint's labels. The test
+    # is observed inside the job that checkpoints the round.
+    not_star = F.max((F.size("ups") > 1)
+                     | ((F.size("ups") == 1) & (F.size("downs") > 0)))
+    sc = edges.sparkSession.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    try:
+        for i in range(max_iter + 1):
+            obs = Observation()
+            sc.setLocalProperty("spark.job.description",
+                                f"connected_components:round{i}")
+            adj = (_adjacency(cur)
+                   .observe(obs, not_star.alias("not_star"))
+                   .localCheckpoint(eager=True))
+            if not obs.get["not_star"]:
+                return adj.select("node", F.coalesce(F.array_min("ups"),
+                                                     F.col("node"))
+                                           .alias("component"))
+            cur = _small_star(_large_star(adj))
+    finally:
+        sc.setLocalProperty("spark.job.description", caller_desc)
+    raise RuntimeError(f"connected_components: no star forest in {max_iter} rounds")
 
 
 def dedup_cluster_labels(all_ids: DataFrame, pairs: DataFrame,

@@ -47,34 +47,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """``dot(a, b)`` unrolled at plan time for a statically known
-    ``dim``: lit(0.0) + a₁·b₁ + a₂·b₂ + … chained left-associative —
-    operand-for-operand the aggregate fold's evaluation order
-    (including the 0.0 seed, so even a -0.0 first product folds the
-    same), hence bit-identical doubles. The payoff is HOW it executes:
-    the unrolled form is plain arithmetic that whole-stage codegen
-    compiles, where the ``aggregate``/``zip_with`` fold runs on the
-    interpreted HOF path once per joined pair (guide §4 — the pair
-    stage is the one place per-element interpretation multiplies by
-    |pairs|·dim). Callers must guarantee both arrays carry exactly
-    ``dim`` elements (beyond ``dim`` the fold and the unroll diverge).
-
-    STATUS (r13): built for the semantic_dedup / embedding_near_dup /
-    knn_lsh / knn_ivf pair stages and MEASURED THERE 5-6x SLOWER at
-    sf1 (139 vs 27 s; 40 vs 6.8 s) — at dim=64 the unrolled chain
-    falls out of whole-stage codegen and evaluates interpreted per
-    pair, which loses badly to the single vectorized HOF fold. All
-    pair stages were reverted to ``cosine_pre``. Kept (with its
-    bit-equality test) as the documented negative result; safe for
-    SMALL dims only."""
-    acc: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + (F.element_at(a, i).cast("double")
-                     * F.element_at(b, i).cast("double"))
-    return acc
-
-
 def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """``cosine(a, b)`` with precomputed norms ``na = norm(a)``,
     ``nb = norm(b)`` — the identical ``dot/(na*nb)`` doubles bit for
@@ -502,11 +474,10 @@ def semantic_dedup(corpus: DataFrame, dim: int, n_clusters: int = 16,
     b = capped.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
                       F.col("_nv").alias("_nb"), "cell")
     # pair-stage cosine: ONE HOF fold (the dot) per pair — the norms
-    # were hoisted into cb above. The no-HOF unrolled form (dot_fixed)
-    # was tried here and MEASURED 5-6x slower at sf1 (139 vs 27 s —
-    # the 64-term element_at chain leaves codegen and evaluates
-    # interpreted per pair, far worse than the single vectorized
-    # fold); reverted, r13.
+    # were hoisted into cb above. A dot unrolled at plan time into a
+    # 64-term element_at chain measured 5-6x slower at sf1 (139 vs
+    # 27 s: the chain leaves codegen and evaluates interpreted per
+    # pair); see OPTIMIZATION_r13.md.
     dropped = (a.join(b, "cell")
                 .filter(F.col("id_a") < F.col("id_b"))
                 .filter(F.round(cosine_pre(F.col("va"), F.col("vb"),

@@ -17,7 +17,7 @@ external sort. What remains to implement is the *spec surface*:
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterable
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -137,23 +137,6 @@ def secondary_sort(df: DataFrame, group_key: str | list[str], order_key: str | l
     ok = [order_key] if isinstance(order_key, str) else list(order_key)
     parts = df.repartition(n_partitions, *gk) if n_partitions else df.repartition(*gk)
     return parts.sortWithinPartitions(*(gk + ok))
-
-
-def grouped_ordered_apply(df: DataFrame, group_key: str | list[str],
-                          order_key: str | list[str],
-                          fn: Callable, schema) -> DataFrame:
-    """Reduce-with-ordered-iteration (the general secondary-sort consumer):
-    applyInPandas over groups, with rows pre-sorted by order_key inside
-    each group pandas frame. Memory risk at 100 TB: one group must fit in
-    one executor's memory — decomposable logic should use window
-    functions instead (SURVEY §7.4.2)."""
-    gk = [group_key] if isinstance(group_key, str) else list(group_key)
-    ok = [order_key] if isinstance(order_key, str) else list(order_key)
-
-    def sorted_fn(pdf):
-        return fn(pdf.sort_values(ok, kind="mergesort"))
-
-    return df.groupBy(*gk).applyInPandas(sorted_fn, schema=schema)
 
 
 def top_k(df: DataFrame, k: int, *order: Column | str) -> DataFrame:

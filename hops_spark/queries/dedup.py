@@ -1147,12 +1147,7 @@ def cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.minhash_dedup_pairs(d, "doc_id", "text", N_HASHES, BANDS,
                                   SHINGLE_N, THRESHOLD)
     labels = dedup_cluster_labels(d.select("doc_id"), pairs) \
-        .filter(F.col("cluster_id") != F.col("doc_id")) \
-        .select("doc_id", "cluster_id") \
-        .unionByName(  # re-add each cluster root as its own member
-            dedup_cluster_labels(d.select("doc_id"), pairs)
-            .filter(F.col("cluster_id") == F.col("doc_id"))
-            .select("doc_id", "cluster_id"))
+        .select("doc_id", "cluster_id")
     q = quality_score(d.select("doc_id", "text")) \
         .select("doc_id", "quality_score_ppm")
     members = labels.join(q, "doc_id")

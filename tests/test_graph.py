@@ -75,6 +75,84 @@ def test_max_iter_guard(spark):
         connected_components(df, max_iter=0)
 
 
+def test_duplicate_reversed_and_self_loop_edges_match_union_find(spark):
+    # Self-loops are dropped, so a node with only a self-loop is
+    # isolated and gets no row; duplicate and reversed edges change
+    # nothing.
+    rng = random.Random(5)
+    for trial in range(3):
+        n = 40
+        base = [(rng.randrange(n), rng.randrange(n)) for _ in range(30)]
+        edges = (base + [(b, a) for a, b in base[::2]] + base[:7]
+                 + [(v, v) for v in rng.sample(range(n), 6)])
+        rng.shuffle(edges)
+        expect = _union_find(n, [(a, b) for a, b in edges if a != b])
+        assert _cc(spark, edges) == expect, f"trial {trial}"
+
+
+def test_empty_and_self_loop_only_inputs(spark):
+    assert _cc(spark, []) == {}
+    assert _cc(spark, [(3, 3), (7, 7)]) == {}
+    df = spark.createDataFrame([(1, 2), (3, 4)], "src long, dst long")
+    assert connected_components(df.filter(F.col("src") > 9)).collect() == []
+
+
+def test_star_forest_input_needs_no_round(spark):
+    """A min-rooted star forest (edges given in both orientations) is
+    recognised before the first large/small-star round, so max_iter=0
+    returns its labels (a chain still raises, see test_max_iter_guard)."""
+    edges = [(0, 4), (9, 0), (0, 2), (1, 3), (5, 1), (6, 8)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {int(r["node"]): int(r["component"])
+           for r in connected_components(df, max_iter=0).collect()}
+    assert got == _union_find(10, edges)
+
+
+def test_disjoint_pairs_run_at_most_two_jobs(spark):
+    """25 disjoint pairs are a star forest: the call runs only the
+    round-0 checkpoint (no probe job, no confirmation round)."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(2 * i, 2 * i + 1) for i in range(25)],
+                               "src long, dst long").localCheckpoint(eager=True)
+    sc.setJobGroup("cc-pairs", "connected components job-count test")
+    try:
+        out = connected_components(df)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("cc-pairs"))
+    finally:
+        sc.setJobGroup("", "")
+    assert 1 <= len(jobs) <= 2, jobs
+    assert {int(r["node"]): int(r["component"]) for r in out.collect()} \
+        == {v: v - v % 2 for v in range(50)}
+
+
+def test_round_descriptions_and_caller_description_restored(spark):
+    """Each round's checkpoint runs as connected_components:round<i>;
+    the caller's job description is back afterwards, also after the
+    max_iter guard raises."""
+    sc = spark.sparkContext
+    chain = spark.createDataFrame([(i, i + 1) for i in range(6)],
+                                  "src long, dst long")
+    sc.setJobGroup("cc-desc", "caller description")
+    try:
+        connected_components(chain)
+        assert sc.getLocalProperty("spark.job.description") \
+            == "caller description"
+        with pytest.raises(RuntimeError):
+            connected_components(chain, max_iter=0)
+        assert sc.getLocalProperty("spark.job.description") \
+            == "caller description"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "cc-desc"
+        jobs = sorted(sc.statusTracker().getJobIdsForGroup("cc-desc"))
+    finally:
+        sc.setJobGroup("", "")
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(j).description() for j in jobs]
+    descs = [d.get() if d.isDefined() else None for d in descs]
+    assert descs and all(d.startswith("connected_components:round")
+                         for d in descs), descs
+    assert "connected_components:round2" in descs
+
+
 def test_duplicate_spans_merges_runs(spark):
     from hops_spark.ops.dedup import duplicate_spans
     # docs 0 and 1 share a 10-token run -> one maximal span each (k=8

@@ -17,7 +17,7 @@ import struct
 from pyspark.sql import functions as F
 
 from hops_spark.ops.similarity import (_py_fold_norm, cosine, cosine_pre,
-                                       dot, dot_fixed, norm)
+                                       dot, norm)
 
 
 def _bits(x):
@@ -60,34 +60,6 @@ def test_cosine_pre_bit_identical_to_cosine(spark):
                                      F.col("_na"), F.col("_nb")).alias("c"))
                   .collect())]
     assert [_bits(x) for x in inline] == [_bits(x) for x in hoisted]
-
-
-def test_dot_fixed_bit_identical_to_hof_dot(spark):
-    """The plan-time unrolled dot (pair-stage codegen path) == the
-    aggregate/zip_with fold, bit for bit — including the 0.0 seed
-    (a -0.0 first product must fold to +0.0 in both forms), float
-    inputs (both cast per element to double), and mixed magnitudes
-    where the left-to-right order matters."""
-    pairs = list(zip(_vecs(30, 64, seed=23), _vecs(30, 64, seed=29)))
-    pairs.append(([1e-154] * 32 + [1e154] * 32,
-                  [1e-154] * 32 + [1e-154] * 32))
-    pairs.append(([-0.0] * 64, [0.0] * 64))       # seed-add edge
-    df = spark.createDataFrame(pairs, "a array<double>, b array<double>")
-    hof = [r[0] for r in
-           df.select(dot(F.col("a"), F.col("b")).alias("d")).collect()]
-    unrolled = [r[0] for r in
-                df.select(dot_fixed(F.col("a"), F.col("b"), 64).alias("d"))
-                  .collect()]
-    assert [_bits(x) for x in hof] == [_bits(x) for x in unrolled]
-    # float inputs (the embeddings table is array<float>): both paths
-    # cast per element before multiplying
-    df32 = spark.createDataFrame(pairs[:8], "a array<float>, b array<float>")
-    hof32 = [r[0] for r in
-             df32.select(dot(F.col("a"), F.col("b")).alias("d")).collect()]
-    un32 = [r[0] for r in
-            df32.select(dot_fixed(F.col("a"), F.col("b"), 64).alias("d"))
-                .collect()]
-    assert [_bits(x) for x in hof32] == [_bits(x) for x in un32]
 
 
 def test_py_fold_norm_matches_naive_math():
