@@ -14,10 +14,10 @@ n_touch) so every aggregate is an order-free integer sum.
 
 ``credit_by_channel`` is the SHARED derivation: the batch query feeds
 it the full log's conversions and touches; the streaming twin
-(streaming.attribution_stream) feeds it each micro-batch's conversions
-against the trailing touch store — same code path, so batch-fold
-equivalence is by construction (the incremental_dedup_stream
-discipline).
+(``streaming.fold_stream(…, attribution_batch_update)``) feeds it each
+micro-batch's conversions against the trailing touch store — same code
+path, so batch-fold equivalence is by construction (the
+incremental_dedup_stream discipline).
 """
 
 from __future__ import annotations

@@ -174,6 +174,102 @@ def stateful_user_totals_tws(events: DataFrame,
                 timeMode="None"))
 
 
+# --- foreachBatch writer and the epoch-committed store -------------------
+
+def fold_stream(stream: DataFrame, batch_update, checkpoint: str, **kwargs):
+    """THE foreachBatch writer: every non-empty micro-batch of ``stream``
+    runs ``batch_update(batch_df, batch_id, **kwargs)``, append mode,
+    offsets checkpointed at ``checkpoint`` — restarting on the same
+    checkpoint resumes after the last committed batch. foreachBatch is
+    at-least-once (a crash redelivers the in-flight batch under the
+    same id), so an update that keys every write by batch_id — the
+    ``_commit_epoch`` stores — is effectively exactly-once. Returns the
+    unstarted writer."""
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            batch_update(batch_df, batch_id, **kwargs)
+
+    return (stream.writeStream.foreachBatch(run)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append"))
+
+
+def _latest_epoch(spark: SparkSession, state_dir: str, schema: str,
+                  at_most: int | None = None, read_cutoff: bool = False):
+    """Read the newest COMMITTED store epoch (epoch=<n> dir with a
+    _SUCCESS marker), optionally capped at ``at_most`` — a crashed
+    write leaves a markerless dir the reader skips, and the cap is the
+    REPLAY guard: batch b always reads the newest epoch ≤ b (its
+    pre-batch state), so a re-delivered batch that already committed
+    its own epoch b+1 cannot read its own output (the foreachBatch
+    at-least-once contract made idempotent). ONE implementation of the
+    epoch discipline for every foreachBatch store (touch store,
+    mixture-stats store, ...).
+
+    Returns (df, epoch) — or (df, epoch, cutoff) with
+    ``read_cutoff=True``, where ``cutoff`` is the prune watermark the
+    epoch was written with (its ``_CUTOFF`` marker), or None for a
+    seed/legacy epoch."""
+    import datetime as _dt
+    import os
+
+    empty = (None, -1, None) if read_cutoff else (None, -1)
+    if not os.path.isdir(state_dir):
+        return empty
+    best = -1
+    for d in os.listdir(state_dir):
+        if d.startswith("epoch=") and os.path.exists(
+                os.path.join(state_dir, d, "_SUCCESS")):
+            n = int(d.split("=", 1)[1])
+            if at_most is None or n <= at_most:
+                best = max(best, n)
+    if best < 0:
+        return empty
+    path = os.path.join(state_dir, f"epoch={best}")
+    df = spark.read.schema(schema).parquet(path)
+    if not read_cutoff:
+        return df, best
+    cutoff = None
+    cpath = os.path.join(path, "_CUTOFF")
+    if os.path.exists(cpath):
+        with open(cpath) as f:
+            cutoff = _dt.datetime.fromisoformat(f.read().strip())
+    return df, best, cutoff
+
+
+def _commit_epoch(df: DataFrame, state_dir: str, batch_id: int,
+                  read_epoch: int, schema: str) -> DataFrame:
+    """Commit ``df`` as store epoch batch_id+1 — overwrite, so a
+    replayed batch rewrites its own epoch — then remove every epoch
+    except the one the batch READ and the one it wrote (≤ 2 on disk:
+    the read epoch must survive until the NEXT batch commits, since
+    only the current batch can be redelivered). Returns the committed
+    epoch as a frame."""
+    import os
+    import shutil
+
+    out = os.path.join(state_dir, f"epoch={batch_id + 1}")
+    df.write.mode("overwrite").parquet(out)
+    for d in os.listdir(state_dir):
+        if (d.startswith("epoch=")
+                and int(d.split("=", 1)[1]) not in (read_epoch,
+                                                    batch_id + 1)):
+            shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+    return df.sparkSession.read.schema(schema).parquet(out)
+
+
+def _fold_sums(store: DataFrame | None, batch: DataFrame,
+               keys: list[str]) -> DataFrame:
+    """Fold a batch's additive statistics into the store it read: union,
+    group by ``keys``, one long sum per other column (an empty store is
+    seeded by the batch alone)."""
+    if store is None:
+        return batch
+    return (store.unionByName(batch).groupBy(*keys)
+            .agg(*[F.sum(c).cast("long").alias(c)
+                   for c in store.columns if c not in keys]))
+
+
 # --- Kafka sink (SURVEY §2.1 KafkaSink) ---------------------------------
 
 def to_kafka_records(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -229,13 +325,11 @@ def kafka_sink_fallback(df: DataFrame, path: str, checkpoint: str,
     """Broker-less twin: the same (key, value) records appended to a
     parquet directory via foreachBatch — swap for kafka_writer in
     production; plan shape and record contract are identical."""
-    rec = to_kafka_records(df, key_cols)
-
-    def write_batch(batch: DataFrame, _epoch: int) -> None:
+    def write_batch(batch: DataFrame, _batch_id: int) -> None:
         batch.write.mode("append").parquet(path)
 
-    return (rec.writeStream.foreachBatch(write_batch)
-               .option("checkpointLocation", checkpoint))
+    return fold_stream(to_kafka_records(df, key_cols), write_batch,
+                       checkpoint)
 
 
 def continuous_ingest(stream_df: DataFrame, out_path: str, checkpoint: str):
@@ -456,14 +550,10 @@ def ann_ingest_stream(stream_vectors: DataFrame,
     from hops_spark.ops.similarity import append_cell_index
 
     def ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         append_cell_index(batch_df.select(id_col, vec_col), centroids,
                           index_dir, id_col, vec_col)
 
-    return (stream_vectors.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
+    return fold_stream(stream_vectors, ingest, checkpoint)
 
 
 def seed_dedup_state(df: DataFrame, state_dir: str,
@@ -526,8 +616,6 @@ def incremental_dedup_stream(stream_docs: DataFrame, state_dir: str,
     part_names = ("digests", "sigs", "shingles")
 
     def dedup_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         missing = [n for n in part_names
                    if not os.path.isdir(os.path.join(state_dir, n))]
@@ -556,9 +644,7 @@ def incremental_dedup_stream(stream_docs: DataFrame, state_dir: str,
                  .write.mode("append")
                  .parquet(os.path.join(state_dir, name)))
 
-    return (stream_docs.writeStream.foreachBatch(dedup_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
+    return fold_stream(stream_docs, dedup_batch, checkpoint)
 
 
 def seed_decon_state(benchmark: DataFrame, state_dir: str,
@@ -597,8 +683,6 @@ def decontaminate_stream(stream_docs: DataFrame, state_dir: str,
     from hops_spark.ops.dedup import contamination_flags_from_shingles
 
     def gate(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         bsh = spark.read.parquet(state_dir)
         flags = contamination_flags_from_shingles(
@@ -611,9 +695,7 @@ def decontaminate_stream(stream_docs: DataFrame, state_dir: str,
                          .alias("contaminated")))
         full.write.mode("append").parquet(flags_dir)
 
-    return (stream_docs.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
+    return fold_stream(stream_docs, gate, checkpoint)
 
 
 def token_count_stream(docs: DataFrame) -> DataFrame:
@@ -709,16 +791,12 @@ def pq_ingest_stream(stream_vectors: DataFrame,
     from hops_spark.ops.pq import append_pq_cell_index
 
     def ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         append_pq_cell_index(batch_df.select(id_col, vec_col),
                              centroids, codebook, index_dir,
                              m=m, k=k, d=d,
                              id_col=id_col, vec_col=vec_col)
 
-    return (stream_vectors.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
+    return fold_stream(stream_vectors, ingest, checkpoint)
 
 
 def covariance_stream(stream_vectors: DataFrame, mu: list, d: int,
@@ -770,63 +848,51 @@ def probe_score_stream(stream_docs: DataFrame, w: list, flags_dir: str,
     from hops_spark.ops.classify import linear_probe_scores
 
     def score(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         docs = batch_df.withColumn("_y0", F.lit(0))
         (linear_probe_scores(docs, w, id_col=id_col, text_col=text_col,
                              y_col="_y0", dim=dim, seed=seed)
          .select(F.col(id_col), "margin", "p_micro", "pred")
          .write.mode("append").parquet(flags_dir))
 
-    return (stream_docs.writeStream.foreachBatch(score)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
+    return fold_stream(stream_docs, score, checkpoint)
 
 
-def mg_hitters_stream(stream_docs: DataFrame, state_dir: str,
-                      checkpoint: str, k: int = 16,
-                      text_col: str = "text"):
-    """Continuous Misra–Gries heavy-hitter maintenance with the
-    summary as state — the streaming twin of ops/sketch.
-    mg_sharded_summary, foreachBatch like incremental_dedup_stream
-    (the truncation step is not an incremental aggregate, so this is
-    not a plain streaming groupBy): per batch, (1) the batch's MG(k)
-    summary via the hash-sharded truncate-and-merge tree
-    (ops/sketch.mg_hashed_summary — per-shard exact histograms, never
-    a single-partition sort of the batch vocabulary; the derivation
-    shared with the batch-fold equivalence test), (2) mg_merge into
-    the stored summary (sum + truncate — Agarwal et al. 2012 §3.1:
-    the error telescopes to ≤ n_seen/(k+1) under ANY merge tree, so
-    a batch-at-a-time left fold over hash-sharded per-batch trees is
-    covered), (3) overwrite the store
-    (merged summary materializes via localCheckpoint first, so the
-    write never races its own read). State is ≤ k rows FOREVER —
-    constant-size monitoring of an unbounded stream; per-batch cost
-    is the batch histogram, independent of history. The drained
-    summary equals the sequential batch fold exactly (asserted in
-    tests/test_streaming.py)."""
-    import os
+MG_SUMMARY_SCHEMA = "term string, c long"
 
+
+def mg_hitters_batch_update(batch_df: DataFrame, batch_id: int,
+                            state_dir: str, k: int = 16,
+                            text_col: str = "text") -> None:
+    """One micro-batch of continuous Misra–Gries heavy-hitter
+    maintenance with the summary as epoch-committed state — the
+    streaming twin of ops/sketch.mg_sharded_summary (the truncation
+    step is not an incremental aggregate, so this is not a plain
+    streaming groupBy): (1) the batch's MG(k) summary via the
+    hash-sharded truncate-and-merge tree (ops/sketch.mg_hashed_summary
+    — per-shard exact histograms, never a single-partition sort of the
+    batch vocabulary; the derivation shared with the batch-fold
+    equivalence test), (2) mg_merge into the newest summary epoch ≤
+    batch_id (sum + truncate — Agarwal et al. 2012 §3.1: the error
+    telescopes to ≤ n_seen/(k+1) under ANY merge tree, so a
+    batch-at-a-time left fold over hash-sharded per-batch trees is
+    covered), (3) ``_commit_epoch`` — so a redelivered batch re-merges
+    into the same pre-batch summary instead of counting itself twice,
+    and a crash mid-write leaves the read epoch intact. State is ≤ k
+    rows FOREVER; per-batch cost is the batch histogram, independent
+    of history. Equivalence law (pytest-asserted): driven through
+    ``fold_stream(docs, mg_hitters_batch_update, ckpt, state_dir=...)``
+    the newest epoch equals the sequential batch fold
+    mg_merge(summary(b0), summary(b1), ...) exactly."""
     from hops_spark.ops.sketch import mg_hashed_summary, mg_merge
     from hops_spark.ops.text import words
 
-    def upd(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        toks = batch_df.select(F.explode(words(text_col)).alias("term"))
-        batch_summ = mg_hashed_summary(toks, "term", k=k)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            merged = mg_merge(state, batch_summ, "term", "c", k)
-        else:
-            merged = batch_summ
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(state_dir)
-
-    return (stream_docs.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
+    toks = batch_df.select(F.explode(words(text_col)).alias("term"))
+    summ = mg_hashed_summary(toks, "term", k=k)
+    store, read_epoch = _latest_epoch(batch_df.sparkSession, state_dir,
+                                      MG_SUMMARY_SCHEMA, at_most=batch_id)
+    if store is not None:
+        summ = mg_merge(store, summ, "term", "c", k)
+    _commit_epoch(summ, state_dir, batch_id, read_epoch, MG_SUMMARY_SCHEMA)
 
 
 def media_ingest_dedup_stream(stream_media: DataFrame, state_dir: str,
@@ -855,8 +921,6 @@ def media_ingest_dedup_stream(stream_media: DataFrame, state_dir: str,
     from hops_spark.ops.fingerprint import fingerprint_dup_ids
 
     def upd(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         hashes = (extract_features(batch_df, decoder=decoder)
                   .select("media_id",
@@ -881,9 +945,7 @@ def media_ingest_dedup_stream(stream_media: DataFrame, state_dir: str,
               .select("media_id", "hi", "lo")
               .write.mode("append").parquet(state_dir))
 
-    return (stream_media.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
+    return fold_stream(stream_media, upd, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -891,57 +953,6 @@ def media_ingest_dedup_stream(stream_media: DataFrame, state_dir: str,
 # ---------------------------------------------------------------------------
 
 _TOUCH_SCHEMA = "touch_id long, user_id long, touch_ts timestamp, channel string"
-
-
-def _latest_epoch(spark: SparkSession, state_dir: str, schema: str,
-                  at_most: int | None = None, read_cutoff: bool = False):
-    """Read the newest COMMITTED store epoch (epoch=<n> dir with a
-    _SUCCESS marker), optionally capped at ``at_most`` — a crashed
-    write leaves a markerless dir the reader skips, and the cap is the
-    REPLAY guard: batch b always reads the newest epoch ≤ b (its
-    pre-batch state), so a re-delivered batch that already committed
-    its own epoch b+1 cannot read its own output (the foreachBatch
-    at-least-once contract made idempotent). ONE implementation of the
-    epoch discipline for every foreachBatch store (touch store,
-    mixture-stats store, ...).
-
-    Returns (df, epoch) — or (df, epoch, cutoff) with
-    ``read_cutoff=True``, where ``cutoff`` is the prune watermark the
-    epoch was written with (its ``_CUTOFF`` marker), or None for a
-    seed/legacy epoch."""
-    import datetime as _dt
-    import os
-
-    empty = (None, -1, None) if read_cutoff else (None, -1)
-    if not os.path.isdir(state_dir):
-        return empty
-    best = -1
-    for d in os.listdir(state_dir):
-        if d.startswith("epoch=") and os.path.exists(
-                os.path.join(state_dir, d, "_SUCCESS")):
-            n = int(d.split("=", 1)[1])
-            if at_most is None or n <= at_most:
-                best = max(best, n)
-    if best < 0:
-        return empty
-    path = os.path.join(state_dir, f"epoch={best}")
-    df = spark.read.schema(schema).parquet(path)
-    if not read_cutoff:
-        return df, best
-    cutoff = None
-    cpath = os.path.join(path, "_CUTOFF")
-    if os.path.exists(cpath):
-        with open(cpath) as f:
-            cutoff = _dt.datetime.fromisoformat(f.read().strip())
-    return df, best, cutoff
-
-
-def _latest_touch_epoch(spark: SparkSession, state_dir: str,
-                        at_most: int | None = None):
-    """Touch-store face of ``_latest_epoch`` (with the prune-cutoff
-    marker the late-arrival check reads)."""
-    return _latest_epoch(spark, state_dir, _TOUCH_SCHEMA, at_most,
-                         read_cutoff=True)
 
 
 def seed_touch_state(events: DataFrame, state_dir: str,
@@ -961,24 +972,37 @@ def attribution_batch_update(batch_df: DataFrame, batch_id: int,
                                                              "signup"),
                              window_days: int = 7,
                              strict_order: bool = True) -> None:
-    """One micro-batch of continuous attribution — module-level so the
-    replay-idempotence contract is directly testable. IDEMPOTENT under
-    foreachBatch's at-least-once redelivery:
+    """One micro-batch of continuous multi-touch attribution (the
+    incremental_dedup_stream discipline applied to the marketing
+    funnel): state is the trailing TOUCH STORE — every touch within
+    ``window_days`` of the newest event time seen — and the batch's
+    conversions are scored against store ∪ same-batch touches through
+    the SAME ops/attribution.credit_by_channel derivation the batch
+    query uses. Equivalence law (pytest-asserted): driven through
+    ``fold_stream(events, attribution_batch_update, ckpt,
+    state_dir=..., credit_dir=...)``, the per-channel DELTAS in
+    credit_dir/batch=<id> summed over batches equal the batch operator
+    on the full log (per-conversion independence makes channel rows
+    additive) PROVIDED events arrive in event-time order — a touch
+    arriving after its conversion's batch is never retro-credited.
+    Per-batch cost: one range join batch-conversions × window-touches
+    + two channels-bounded aggregates + one window-sized store rewrite.
+
+    IDEMPOTENT under foreachBatch's at-least-once redelivery:
 
     - reads the newest committed epoch ≤ batch_id (never its own
       output epoch batch_id+1, which a crashed-after-commit replay
       would otherwise union with the batch a second time);
     - writes this batch's credit DELTAS to credit_dir/batch=<id> with
       overwrite (a replay replaces its own rows, never appends twice);
-    - rewrites store epoch batch_id+1 from scratch (replay replaces);
-    - retains the epoch it READ plus the one it wrote (≤ 2 on disk) —
-      the read epoch must survive until the NEXT batch commits, since
-      only the current batch can be redelivered.
+    - commits store epoch batch_id+1, PRUNED to the trailing window,
+      through ``_commit_epoch`` (replay replaces; ≤ 2 epochs retained).
 
     Event-time ORDER violations are detected, not silent: each store
-    epoch records its prune cutoff (``_CUTOFF`` marker), and a batch
-    whose min(ts) precedes the cutoff it read — rows whose touches may
-    already be pruned, diverging from the batch operator — raises
+    epoch records its prune cutoff (``_CUTOFF`` marker, written after
+    the parquet commit), and a batch whose min(ts) precedes the cutoff
+    it read — rows whose touches may already be pruned, diverging from
+    the batch operator — raises
     (``strict_order=True``, default) or writes the late-row count to
     ``credit_dir/batch=<id>/_LATE_ROWS`` and proceeds. The check is one
     scalar comparison on the min/max aggregate the prune already runs;
@@ -986,18 +1010,15 @@ def attribution_batch_update(batch_df: DataFrame, batch_id: int,
     epoch, hence the same cutoff)."""
     import datetime as _dt
     import os
-    import shutil
 
     from hops_spark.ops.attribution import (conv_rows, credit_by_channel,
                                             touch_rows)
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     batch = (batch_df.select("event_id", "user_id", "ts", "event_type")
                      .localCheckpoint(eager=True))
-    store, read_epoch, read_cutoff = _latest_touch_epoch(spark, state_dir,
-                                                         at_most=batch_id)
+    store, read_epoch, read_cutoff = _latest_epoch(
+        spark, state_dir, _TOUCH_SCHEMA, at_most=batch_id, read_cutoff=True)
     if store is not None and read_epoch > 0 and read_cutoff is None:
         # A committed non-seed epoch with no _CUTOFF marker is the
         # crash window between its parquet commit (_SUCCESS) and the
@@ -1036,68 +1057,14 @@ def attribution_batch_update(batch_df: DataFrame, batch_id: int,
             f.write(str(late_rows))
     # prune + commit the next store epoch (replay rewrites it)
     cutoff = max_ts - _dt.timedelta(days=window_days)
-    out = os.path.join(state_dir, f"epoch={batch_id + 1}")
-    (touches.filter(F.col("touch_ts") >= F.lit(cutoff))
-            .write.mode("overwrite").parquet(out))
-    with open(os.path.join(out, "_CUTOFF"), "w") as f:
+    _commit_epoch(touches.filter(F.col("touch_ts") >= F.lit(cutoff)),
+                  state_dir, batch_id, read_epoch, _TOUCH_SCHEMA)
+    with open(os.path.join(state_dir, f"epoch={batch_id + 1}", "_CUTOFF"),
+              "w") as f:
         f.write(cutoff.isoformat())
-    for d in os.listdir(state_dir):
-        if d.startswith("epoch="):
-            n = int(d.split("=", 1)[1])
-            if n != read_epoch and n != batch_id + 1:
-                shutil.rmtree(os.path.join(state_dir, d),
-                              ignore_errors=True)
-
-
-def attribution_stream(stream_events: DataFrame, state_dir: str,
-                       credit_dir: str, checkpoint: str,
-                       conv_type: str = "purchase",
-                       touch_types: tuple[str, ...] = ("click", "view",
-                                                       "signup"),
-                       window_days: int = 7):
-    """Continuous multi-touch attribution (the incremental_dedup_stream
-    discipline applied to the marketing funnel): state is the trailing
-    TOUCH STORE — every touch within ``window_days`` of the newest
-    event time seen — and each micro-batch's conversions are scored
-    against store ∪ same-batch touches through the SAME
-    ops/attribution.credit_by_channel derivation the batch query uses.
-    Per-channel DELTAS land in credit_dir/batch=<id>; summing the delta
-    log per channel equals the batch operator on the full log
-    (per-conversion independence makes channel rows additive;
-    batch-fold equivalence is pytest-asserted) PROVIDED events arrive
-    in event-time order — a touch arriving after its conversion's
-    batch is never retro-credited (the store only moves forward; same
-    late-data contract as the watermarked windows, stated not hidden).
-
-    Crash/replay contract (attribution_batch_update, directly
-    pytest-asserted): every write is keyed by batch_id and
-    overwrite-mode, the store read is capped at the batch's own id,
-    and ≤ 2 store epochs are retained — so foreachBatch's
-    at-least-once redelivery cannot double-count touches or deltas.
-    State is bounded: the store is rewritten each batch PRUNED to the
-    trailing window (touches older than window_days behind the batch
-    max can never attribute a future in-order conversion). Per-batch
-    cost: one range join batch-conversions × window-touches + two
-    channels-bounded aggregates + one window-sized store rewrite."""
-    def upd(batch_df: DataFrame, batch_id: int) -> None:
-        attribution_batch_update(batch_df, batch_id, state_dir, credit_dir,
-                                 conv_type, touch_types, window_days)
-
-    return (stream_events.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
 
 
 # --- online training-mixture controller (DoReMi, frozen scorer) ----------
-
-
-def _latest_mix_epoch(spark: SparkSession, state_dir: str,
-                      at_most: int | None = None):
-    """Mixture-stats face of ``_latest_epoch`` (schema owned by
-    ops/mixture, where frozen_domain_stats produces the frame)."""
-    from hops_spark.ops.mixture import DOMAIN_STATS_SCHEMA
-
-    return _latest_epoch(spark, state_dir, DOMAIN_STATS_SCHEMA, at_most)
 
 
 def seed_mixture_scorer(ref_docs: DataFrame, scorer_dir: str) -> None:
@@ -1118,7 +1085,10 @@ def mixture_batch_update(batch_df: DataFrame, batch_id: int,
     mixture_from_domain_stats derivation the batch query uses) lands
     in mix_dir/batch=<id>. The data-scheduling loop reads the newest
     batch dir for its weights — DoReMi's mixture-updates-while-the-
-    proxy-stays-fixed shape, continuously.
+    proxy-stays-fixed shape, continuously. Equivalence law
+    (pytest-asserted): the mixture written after batch k equals
+    mixture_from_domain_stats(frozen_domain_stats(union of batches
+    0..k)) — additivity of frozen-scored stats makes the fold exact.
 
     IDEMPOTENT under foreachBatch redelivery (the attribution_batch_
     update contract): store read capped at batch_id, every write keyed
@@ -1127,66 +1097,28 @@ def mixture_batch_update(batch_df: DataFrame, batch_id: int,
     source — the smallest state in the streaming family), so replay
     and retention cost nothing."""
     import os
-    import shutil
 
     from hops_spark.ops.mixture import (DOMAIN_STATS_SCHEMA,
                                         frozen_domain_stats,
                                         mixture_from_domain_stats)
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     scorer = spark.read.parquet(scorer_dir)
     batch_stats = frozen_domain_stats(
         batch_df.select("doc_id", "source", "text"), scorer)
-    store, read_epoch = _latest_mix_epoch(spark, state_dir,
-                                          at_most=batch_id)
-    stats = batch_stats if store is None else (
-        store.unionByName(batch_stats)
-             .groupBy("source")
-             .agg(F.sum("n_tokens").cast("long").alias("n_tokens"),
-                  F.sum("nll_sum").cast("long").alias("nll_sum")))
-    out = os.path.join(state_dir, f"epoch={batch_id + 1}")
-    stats.write.mode("overwrite").parquet(out)
-    folded = spark.read.schema(DOMAIN_STATS_SCHEMA).parquet(out)
+    store, read_epoch = _latest_epoch(spark, state_dir, DOMAIN_STATS_SCHEMA,
+                                      at_most=batch_id)
+    folded = _commit_epoch(_fold_sums(store, batch_stats, ["source"]),
+                           state_dir, batch_id, read_epoch,
+                           DOMAIN_STATS_SCHEMA)
     (mixture_from_domain_stats(folded)
      .write.mode("overwrite")
      .parquet(os.path.join(mix_dir, f"batch={batch_id}")))
-    for d in os.listdir(state_dir):
-        if d.startswith("epoch="):
-            n = int(d.split("=", 1)[1])
-            if n != read_epoch and n != batch_id + 1:
-                shutil.rmtree(os.path.join(state_dir, d),
-                              ignore_errors=True)
-
-
-def mixture_stream(stream_docs: DataFrame, state_dir: str, mix_dir: str,
-                   scorer_dir: str, checkpoint: str):
-    """Continuous mixture control over a document stream: fold
-    per-domain stats, emit the refreshed DoReMi weights per batch.
-    Equivalence law (pytest-asserted): the mixture written after batch
-    k equals mixture_from_domain_stats(frozen_domain_stats(union of
-    batches 0..k)) — additivity of frozen-scored stats makes the fold
-    exact, and both faces share the ops/mixture derivation."""
-    def upd(batch_df: DataFrame, batch_id: int) -> None:
-        mixture_batch_update(batch_df, batch_id, state_dir, mix_dir,
-                             scorer_dir)
-
-    return (stream_docs.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
 
 
 # --- online probe-calibration drift monitor (frozen weights) --------------
 
 CALIB_STATS_SCHEMA = "bin long, n long, n_pos long, p_sum long"
-
-
-def _latest_calib_epoch(spark: SparkSession, state_dir: str,
-                        at_most: int | None = None):
-    """Calibration-bin-stats face of ``_latest_epoch`` (schema owned by
-    ops/classify.calibration_bin_stats)."""
-    return _latest_epoch(spark, state_dir, CALIB_STATS_SCHEMA, at_most)
 
 
 def seed_probe_weights(ref_docs: DataFrame, weights_dir: str,
@@ -1220,7 +1152,11 @@ def calibration_batch_update(batch_df: DataFrame, batch_id: int,
     reads) lands in calib_dir/batch=<id>. A quality-gate deployment
     watches the per-bin gaps drift as the corpus shifts under a fixed
     keep-threshold probe — the score-drift companion of the mixture
-    controller.
+    controller. Equivalence law (pytest-asserted): the table written
+    after batch k equals calibration_from_bin_stats(
+    calibration_bin_stats(scores of the union of batches 0..k)) under
+    the same frozen weights — additivity of per-bin sufficient stats
+    makes the fold exact.
 
     IDEMPOTENT under foreachBatch redelivery (the attribution/mixture
     contract): store read capped at batch_id, every write keyed by
@@ -1230,71 +1166,30 @@ def calibration_batch_update(batch_df: DataFrame, batch_id: int,
     frozen weight vector is dim+1 rows of driver metadata (codebook
     idiom)."""
     import os
-    import shutil
 
     from hops_spark.ops.classify import (calibration_bin_stats,
                                          calibration_from_bin_stats,
                                          linear_probe_scores)
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     w = [int(r["w_micro"]) for r in
          spark.read.parquet(weights_dir).orderBy("feat").collect()]
     scored = linear_probe_scores(batch_df.select("doc_id", "text", "y"),
                                  w, dim=dim, seed=seed)
     batch_stats = calibration_bin_stats(scored, bins)
-    store, read_epoch = _latest_calib_epoch(spark, state_dir,
-                                            at_most=batch_id)
-    stats = batch_stats if store is None else (
-        store.unionByName(batch_stats)
-             .groupBy("bin")
-             .agg(F.sum("n").cast("long").alias("n"),
-                  F.sum("n_pos").cast("long").alias("n_pos"),
-                  F.sum("p_sum").cast("long").alias("p_sum")))
-    out = os.path.join(state_dir, f"epoch={batch_id + 1}")
-    stats.write.mode("overwrite").parquet(out)
-    folded = spark.read.schema(CALIB_STATS_SCHEMA).parquet(out)
+    store, read_epoch = _latest_epoch(spark, state_dir, CALIB_STATS_SCHEMA,
+                                      at_most=batch_id)
+    folded = _commit_epoch(_fold_sums(store, batch_stats, ["bin"]),
+                           state_dir, batch_id, read_epoch,
+                           CALIB_STATS_SCHEMA)
     (calibration_from_bin_stats(folded)
      .write.mode("overwrite")
      .parquet(os.path.join(calib_dir, f"batch={batch_id}")))
-    for d in os.listdir(state_dir):
-        if d.startswith("epoch="):
-            n = int(d.split("=", 1)[1])
-            if n != read_epoch and n != batch_id + 1:
-                shutil.rmtree(os.path.join(state_dir, d),
-                              ignore_errors=True)
-
-
-def calibration_stream(stream_docs: DataFrame, state_dir: str,
-                       calib_dir: str, weights_dir: str, checkpoint: str,
-                       dim: int = 64, seed: str = "lp", bins: int = 10):
-    """Continuous probe-calibration monitoring over a labeled document
-    stream. Equivalence law (pytest-asserted): the reliability table
-    written after batch k equals calibration_from_bin_stats(
-    calibration_bin_stats(scores of the union of batches 0..k)) under
-    the same frozen weights — additivity of per-bin sufficient stats
-    makes the fold exact, and both faces share the ops/classify
-    derivation."""
-    def upd(batch_df: DataFrame, batch_id: int) -> None:
-        calibration_batch_update(batch_df, batch_id, state_dir, calib_dir,
-                                 weights_dir, dim, seed, bins)
-
-    return (stream_docs.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
 
 
 # --- continuously-refreshed trigram-KN ARPA model ------------------------
 
 TRI_STATS_SCHEMA = "w1 string, w2 string, w3 string, n long"
-
-
-def _latest_tri_epoch(spark: SparkSession, state_dir: str,
-                      at_most: int | None = None):
-    """Trigram-count face of ``_latest_epoch`` (schema owned by
-    ops/lm.trigram_count_table)."""
-    return _latest_epoch(spark, state_dir, TRI_STATS_SCHEMA, at_most)
 
 
 def arpa_batch_update(batch_df: DataFrame, batch_id: int, state_dir: str,
@@ -1307,7 +1202,9 @@ def arpa_batch_update(batch_df: DataFrame, batch_id: int, state_dir: str,
     kn3_arpa derivation the batch export uses) is rebuilt from the
     folded counts into model_dir/batch=<id>. Downstream perplexity
     gates (kn3_score_docs) read the newest batch dir — the KenLM
-    nightly-rebuild shape, continuously.
+    nightly-rebuild shape, continuously. Equivalence law
+    (pytest-asserted): the model written after batch k equals
+    kn3_arpa(trigram_count_table(union of batches 0..k)).
 
     IDEMPOTENT under foreachBatch redelivery (the attribution/mixture/
     calibration contract): store read capped at batch_id, writes keyed
@@ -1316,50 +1213,20 @@ def arpa_batch_update(batch_df: DataFrame, batch_id: int, state_dir: str,
     distinct trigram — the count-table store class, same as
     term_stats_incremental), never token-proportional."""
     import os
-    import shutil
 
     from hops_spark.ops.lm import kn3_arpa, trigram_count_table
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     batch_counts = trigram_count_table(
         batch_df.select("doc_id", "text"))
-    store, read_epoch = _latest_tri_epoch(spark, state_dir,
-                                          at_most=batch_id)
-    counts = batch_counts if store is None else (
-        store.unionByName(batch_counts)
-             .groupBy("w1", "w2", "w3")
-             .agg(F.sum("n").cast("long").alias("n")))
-    out = os.path.join(state_dir, f"epoch={batch_id + 1}")
-    counts.write.mode("overwrite").parquet(out)
-    folded = spark.read.schema(TRI_STATS_SCHEMA).parquet(out)
+    store, read_epoch = _latest_epoch(spark, state_dir, TRI_STATS_SCHEMA,
+                                      at_most=batch_id)
+    folded = _commit_epoch(_fold_sums(store, batch_counts,
+                                      ["w1", "w2", "w3"]),
+                           state_dir, batch_id, read_epoch, TRI_STATS_SCHEMA)
     (kn3_arpa(folded, prune3=prune3)
      .write.mode("overwrite")
      .parquet(os.path.join(model_dir, f"batch={batch_id}")))
-    for d in os.listdir(state_dir):
-        if d.startswith("epoch="):
-            n = int(d.split("=", 1)[1])
-            if n != read_epoch and n != batch_id + 1:
-                shutil.rmtree(os.path.join(state_dir, d),
-                              ignore_errors=True)
-
-
-def arpa_stream(stream_docs: DataFrame, state_dir: str, model_dir: str,
-                checkpoint: str, prune3: int = 2):
-    """Continuous LM maintenance over a document stream: fold trigram
-    counts, rebuild the exported ARPA table per batch. Equivalence law
-    (pytest-asserted): the model written after batch k equals
-    kn3_arpa(trigram_count_table(union of batches 0..k)) — count
-    additivity makes the fold exact, and both faces share the
-    ops/lm derivation (the shared-derivation rule, LM edition)."""
-    def upd(batch_df: DataFrame, batch_id: int) -> None:
-        arpa_batch_update(batch_df, batch_id, state_dir, model_dir,
-                          prune3)
-
-    return (stream_docs.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))
 
 
 # --- continuously-refreshed cross-model win matrix + strengths -----------
@@ -1380,21 +1247,23 @@ def winrate_batch_update(batch_df: DataFrame, batch_id: int,
     artifact (out_dir/batch=<id>) is the Bradley-Terry strength table
     rebuilt from the folded matrix via the SAME
     ops/preference.bradley_terry_fit integer iteration the batch query
-    runs.
+    runs. Equivalence law (pytest-asserted): the table written after
+    batch k equals the batch bradley_terry_strengths derivation over
+    the union of batches 0..k — outcome-count additivity plus the
+    pending-side store makes the fold exact even when a pair's two
+    docs arrive in DIFFERENT batches.
 
     State: pending sides (bounded by in-flight incomplete pairs) +
     the #models²-bounded matrix — never corpus-proportional.
     IDEMPOTENT under foreachBatch redelivery: store reads capped at
-    batch_id, writes keyed by batch_id with overwrite, epochs pruned
-    to ≤ 2 (the attribution/mixture/calibration/arpa contract)."""
+    batch_id, writes keyed by batch_id with overwrite, each store
+    committed through ``_commit_epoch`` (≤ 2 epochs; the
+    attribution/mixture/calibration/arpa contract)."""
     import os
-    import shutil
 
     from hops_spark.ops.preference import (BT_ITERS, bradley_terry_fit,
                                            scored_docs)
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     pend_dir = os.path.join(state_dir, "pending")
     mat_dir = os.path.join(state_dir, "matrix")
@@ -1441,24 +1310,9 @@ def winrate_batch_update(batch_df: DataFrame, batch_id: int,
                             .cast("long")).cast("long").alias("wa")))
     mat, me = _latest_epoch(spark, mat_dir, WIN_MATRIX_SCHEMA,
                             at_most=batch_id)
-    folded = batch_mat if mat is None else (
-        mat.unionByName(batch_mat)
-           .groupBy("model_a", "model_b")
-           .agg(F.sum("n").cast("long").alias("n"),
-                F.sum("wa").cast("long").alias("wa")))
-    new_pend.write.mode("overwrite").parquet(
-        os.path.join(pend_dir, f"epoch={batch_id + 1}"))
-    folded.write.mode("overwrite").parquet(
-        os.path.join(mat_dir, f"epoch={batch_id + 1}"))
-    for d, keep in ((pend_dir, pe), (mat_dir, me)):
-        for e in os.listdir(d):
-            if e.startswith("epoch="):
-                n = int(e.split("=", 1)[1])
-                if n != keep and n != batch_id + 1:
-                    shutil.rmtree(os.path.join(d, e),
-                                  ignore_errors=True)
-    rows = spark.read.schema(WIN_MATRIX_SCHEMA).parquet(
-        os.path.join(mat_dir, f"epoch={batch_id + 1}")).collect()
+    _commit_epoch(new_pend, pend_dir, batch_id, pe, PAIR_SIDE_SCHEMA)
+    rows = _commit_epoch(_fold_sums(mat, batch_mat, ["model_a", "model_b"]),
+                         mat_dir, batch_id, me, WIN_MATRIX_SCHEMA).collect()
     s = bradley_terry_fit([(r["model_a"], r["model_b"], r["wa"],
                             r["n"] - r["wa"]) for r in rows],
                           iters=BT_ITERS)
@@ -1475,21 +1329,3 @@ def winrate_batch_update(batch_df: DataFrame, batch_id: int,
         "model string, n_wins long, n_pairs long, strength_micro long"
     ).write.mode("overwrite").parquet(
         os.path.join(out_dir, f"batch={batch_id}"))
-
-
-def winrate_stream(stream_docs: DataFrame, state_dir: str, out_dir: str,
-                   checkpoint: str):
-    """Continuous reward-model evaluation over a document stream: fold
-    completed cross-source pair outcomes into the win matrix, rebuild
-    the Bradley-Terry strength table per batch. Equivalence law
-    (pytest-asserted): the table written after batch k equals the
-    batch bradley_terry_strengths derivation over the union of batches
-    0..k — outcome-count additivity plus the pending-side store makes
-    the fold exact even when a pair's two docs arrive in DIFFERENT
-    batches; both faces share the ops/preference derivations."""
-    def upd(batch_df: DataFrame, batch_id: int) -> None:
-        winrate_batch_update(batch_df, batch_id, state_dir, out_dir)
-
-    return (stream_docs.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append"))

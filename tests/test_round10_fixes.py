@@ -1,12 +1,10 @@
-"""Round-10 regression tests for the four ADVICE.md r9 findings:
-exact integer bucketing in interval_overlap_join, fail-loud wordpiece
-char fallback, observable late-arrival handling in the attribution
-stream, and the neyman_allocation zero-weight guard."""
+"""Round-10 regression tests for ADVICE.md r9 findings: exact integer
+bucketing in interval_overlap_join, fail-loud wordpiece char fallback,
+and the neyman_allocation zero-weight guard (the attribution
+late-arrival test lives with the other fold tests in
+tests/test_streaming.py)."""
 
 from __future__ import annotations
-
-import datetime as dt
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,37 +79,6 @@ def test_wordpiece_char_fallback_fails_loud_on_foreign_vocab(spark):
         [("abababababzb", 1)], "w string, n_occ long")
     with pytest.raises(Exception, match="lacks char piece"):
         wp_greedy_segment(long_foreign, pieces, max_len=10).collect()
-
-
-def test_attribution_late_batch_raises_or_counts(spark, tmp_path):
-    """A batch older than the store's prune cutoff diverges from the
-    batch operator; default is a loud error, strict_order=False writes
-    an observable _LATE_ROWS marker and proceeds."""
-    from hops_spark.streaming import attribution_batch_update
-
-    t0 = dt.datetime(2024, 3, 1)
-    schema = "event_id long, user_id long, ts timestamp, event_type string"
-    b0 = spark.createDataFrame(
-        [(1, 1, t0, "click"),
-         (2, 1, t0 + dt.timedelta(days=30), "purchase")], schema)
-    # b1 predates b0's cutoff (max_ts - 7d = t0 + 23d)
-    b1 = spark.createDataFrame(
-        [(3, 1, t0 + dt.timedelta(days=1), "view"),
-         (4, 1, t0 + dt.timedelta(days=31), "purchase")], schema)
-    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
-    attribution_batch_update(b0, 0, state, credit)
-    with pytest.raises(ValueError, match="older than the store's prune"):
-        attribution_batch_update(b1, 1, state, credit)
-    attribution_batch_update(b1, 1, state, credit, strict_order=False)
-    marker = os.path.join(credit, "batch=1", "_LATE_ROWS")
-    assert os.path.exists(marker)
-    with open(marker) as f:
-        assert int(f.read()) == 1   # the late view, not the purchase
-    # in-order batches never produce the marker
-    b2 = spark.createDataFrame(
-        [(5, 1, t0 + dt.timedelta(days=32), "purchase")], schema)
-    attribution_batch_update(b2, 2, state, credit)
-    assert not os.path.exists(os.path.join(credit, "batch=2", "_LATE_ROWS"))
 
 
 def test_neyman_allocation_zero_weight_fails_loud(spark, tmp_path):

@@ -283,54 +283,6 @@ def test_event_path_mining_hand_computed(spark, tmp_path):
     assert len(out) == 3
 
 
-def test_mixture_stream_folds_like_batch(spark, tmp_path):
-    """Online mixture controller: after each batch, the written
-    mixture equals the batch derivation over the UNION of batches so
-    far under the same frozen scorer (additivity of frozen-scored
-    stats), and redelivering the last batch changes nothing."""
-    from hops_spark.ops.mixture import (frozen_domain_stats,
-                                        mixture_from_domain_stats)
-    from hops_spark.streaming import (mixture_batch_update,
-                                      seed_mixture_scorer)
-
-    schema = "doc_id long, source string, text string"
-    ref = spark.createDataFrame(
-        [(900 + i, "ref", "one two three four five one two") for i in range(4)],
-        schema)
-    b0 = spark.createDataFrame(
-        [(1, "easy", "one two one two one two one"),
-         (2, "hard", "three five two four one three five")], schema)
-    b1 = spark.createDataFrame(
-        [(3, "easy", "one two one two one"),
-         (4, "hard", "five four three two one five four"),
-         (5, "easy", "two one two one two")], schema)
-    scorer_dir = str(tmp_path / "scorer")
-    state, mix = str(tmp_path / "st"), str(tmp_path / "mix")
-    seed_mixture_scorer(ref, scorer_dir)
-    scorer = spark.read.parquet(scorer_dir)
-
-    def written(bid):
-        return sorted(tuple(r) for r in
-                      spark.read.parquet(f"{mix}/batch={bid}").collect())
-
-    def batch_answer(df):
-        return sorted(tuple(r) for r in mixture_from_domain_stats(
-            frozen_domain_stats(df, scorer)).collect())
-
-    mixture_batch_update(b0, 0, state, mix, scorer_dir)
-    assert written(0) == batch_answer(b0)
-    mixture_batch_update(b1, 1, state, mix, scorer_dir)
-    full = b0.unionByName(b1)
-    assert written(1) == batch_answer(full)
-    # weights stay a valid design at every step
-    w1 = {r[0]: r[-1] for r in written(1)}
-    assert sum(w1.values()) == 1_000_000
-    # replay idempotence: redeliver batch 1, nothing changes
-    before = (written(0), written(1))
-    mixture_batch_update(b1, 1, state, mix, scorer_dir)
-    assert (written(0), written(1)) == before
-
-
 def test_lsh_recall_eval_counts_and_bounds(spark, tmp_path):
     """On a corpus with planted exact duplicates inside the sample,
     truth/pred counts line up, recall is exact ppm arithmetic, and

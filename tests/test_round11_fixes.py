@@ -1,72 +1,12 @@
-"""Round-11 regression tests for the three ADVICE.md r10 findings:
-recovering a missing _CUTOFF marker from the touch store itself
-(crash between a store epoch's parquet commit and its marker write),
-the mixture_schedule_sample achieved_ppm zero-total guard, and the
-corpus_data_card empty-table guards."""
+"""Round-11 regression tests for ADVICE.md r10 findings: the
+mixture_schedule_sample achieved_ppm zero-total guard and the
+corpus_data_card empty-table guards (the missing-_CUTOFF recovery tests
+live with the other fold tests in tests/test_streaming.py)."""
 
 from __future__ import annotations
 
-import datetime as dt
-import os
-
 import duckdb
-import pytest
 from pyspark.sql import functions as F
-
-
-def test_attribution_missing_cutoff_recovered_from_store(spark, tmp_path):
-    """A committed non-seed epoch whose _CUTOFF marker is missing (the
-    crash window between parquet _SUCCESS and the marker write) must
-    still run the late-arrival check: the cutoff is recovered from
-    max(touch_ts) - window, so a late batch raises instead of being
-    silently accepted."""
-    from hops_spark.streaming import attribution_batch_update
-
-    t0 = dt.datetime(2024, 3, 1)
-    schema = "event_id long, user_id long, ts timestamp, event_type string"
-    b0 = spark.createDataFrame(
-        [(1, 1, t0, "click"),
-         (2, 1, t0 + dt.timedelta(days=30), "click"),
-         (3, 1, t0 + dt.timedelta(days=30), "purchase")], schema)
-    # b1 predates b0's cutoff (max_ts - 7d = t0 + 23d)
-    b1 = spark.createDataFrame(
-        [(4, 1, t0 + dt.timedelta(days=1), "view"),
-         (5, 1, t0 + dt.timedelta(days=31), "purchase")], schema)
-    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
-    attribution_batch_update(b0, 0, state, credit)
-    # simulate the crash: epoch 1 committed (_SUCCESS present) but the
-    # _CUTOFF marker never landed
-    marker = os.path.join(state, "epoch=1", "_CUTOFF")
-    assert os.path.exists(marker)
-    os.remove(marker)
-    with pytest.raises(ValueError, match="older than the store's prune"):
-        attribution_batch_update(b1, 1, state, credit)
-    # the recovery is conservative: max(touch_ts)=t0+30d gives cutoff
-    # t0+23d here (equal to the true one since the max event was a
-    # touch); an in-order batch still sails through
-    b2 = spark.createDataFrame(
-        [(6, 1, t0 + dt.timedelta(days=32), "purchase")], schema)
-    attribution_batch_update(b2, 1, state, credit)
-    assert not os.path.exists(os.path.join(credit, "batch=1", "_LATE_ROWS"))
-
-
-def test_attribution_seed_epoch_without_cutoff_still_unchecked(spark,
-                                                               tmp_path):
-    """Epoch 0 (seed_touch_state) legitimately has no _CUTOFF — nothing
-    was ever pruned from it, so batch 0 must NOT raise on old rows."""
-    from hops_spark.streaming import attribution_batch_update, seed_touch_state
-
-    t0 = dt.datetime(2024, 3, 1)
-    schema = "event_id long, user_id long, ts timestamp, event_type string"
-    seed = spark.createDataFrame(
-        [(1, 1, t0 + dt.timedelta(days=40), "click")], schema)
-    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
-    seed_touch_state(seed, state)
-    old = spark.createDataFrame(
-        [(2, 1, t0, "view"),
-         (3, 1, t0 + dt.timedelta(days=41), "purchase")], schema)
-    attribution_batch_update(old, 0, state, credit)   # no raise
-    assert os.path.exists(os.path.join(credit, "batch=0"))
 
 
 def _write_docs(spark, tmp_path, rows):

@@ -199,64 +199,6 @@ def test_anneal_schedule_endpoints_and_sums(spark):
     assert aw == sorted(aw, reverse=True) and cw == sorted(cw)
 
 
-def test_calibration_stream_folds_like_batch(spark, tmp_path):
-    """Online calibration monitor: after each batch, the written
-    reliability table equals the shared batch derivation over the
-    UNION of batches so far under the same frozen weights (additivity
-    of per-bin sufficient stats), and redelivering the last batch
-    changes nothing."""
-    from hops_spark.ops.classify import (calibration_bin_stats,
-                                         calibration_from_bin_stats,
-                                         linear_probe_scores)
-    from hops_spark.streaming import (calibration_batch_update,
-                                      seed_probe_weights)
-
-    schema = "doc_id long, text string, y int"
-    ref = spark.createDataFrame(
-        [(900 + i, "good clean prose with many words", 1)
-         for i in range(3)]
-        + [(950 + i, "zz zz zz", 0) for i in range(3)], schema)
-    b0 = spark.createDataFrame(
-        [(1, "good clean prose with many words", 1),
-         (2, "zz zz zz", 0)], schema)
-    b1 = spark.createDataFrame(
-        [(3, "good clean words here", 1),
-         (4, "zz zz", 0),
-         (5, "prose with many words indeed", 1)], schema)
-    weights = str(tmp_path / "w")
-    state, calib = str(tmp_path / "st"), str(tmp_path / "cal")
-    seed_probe_weights(ref, weights, dim=16, seed="ct")
-    w = [int(r["w_micro"]) for r in
-         spark.read.parquet(weights).orderBy("feat").collect()]
-    assert len(w) == 17     # dim + bias
-
-    def written(bid):
-        return sorted(tuple(r) for r in
-                      spark.read.parquet(f"{calib}/batch={bid}").collect())
-
-    def batch_answer(df):
-        s = linear_probe_scores(df, w, dim=16, seed="ct")
-        return sorted(tuple(r) for r in calibration_from_bin_stats(
-            calibration_bin_stats(s, bins=10)).collect())
-
-    calibration_batch_update(b0, 0, state, calib, weights, dim=16,
-                             seed="ct")
-    assert written(0) == batch_answer(b0)
-    calibration_batch_update(b1, 1, state, calib, weights, dim=16,
-                             seed="ct")
-    assert written(1) == batch_answer(b0.unionByName(b1))
-    # derived-table invariants: n = bin totals, gap = |conf - emp|
-    rows = written(1)
-    assert sum(r[1] for r in rows) == 5
-    for r in rows:
-        assert r[5] == abs(r[3] - r[4])
-    # replay idempotence: redeliver batch 1, nothing changes
-    before = (written(0), written(1))
-    calibration_batch_update(b1, 1, state, calib, weights, dim=16,
-                             seed="ct")
-    assert (written(0), written(1)) == before
-
-
 def test_kn3_doc_scores_backoff_replays_stored_table(spark):
     """The consumer's per-doc NLL equals a python replay over the
     exported ARPA table: seen trigrams cost stored nlp3, pruned ones
@@ -371,35 +313,3 @@ def test_anneal_step_sample_nested_and_consistent(spark, tmp_path):
     base = {r["source"]: (r["n_kept"], r["kept_tokens"])
             for r in mixture_schedule_sample(spark, str(tmp_path)).collect()}
     assert step0 == base
-
-
-def test_arpa_stream_folds_like_batch(spark, tmp_path):
-    """Continuously-refreshed LM: after each batch, the written ARPA
-    table equals the batch export over the UNION of batches so far
-    (count additivity), and redelivering the last batch changes
-    nothing."""
-    from hops_spark.ops.lm import kn3_arpa, trigram_count_table
-    from hops_spark.streaming import arpa_batch_update
-
-    b0 = _docs(spark, [(1, "a b c a b c"), (2, "a b d e")])
-    b1 = _docs(spark, [(3, "b c a b c"), (4, "c a b d")])
-    state, model = str(tmp_path / "st"), str(tmp_path / "m")
-
-    def written(bid):
-        return sorted(tuple(r) for r in
-                      spark.read.parquet(f"{model}/batch={bid}").collect())
-
-    def batch_answer(df):
-        return sorted(tuple(r) for r in
-                      kn3_arpa(trigram_count_table(df), prune3=2).collect())
-
-    arpa_batch_update(b0, 0, state, model)
-    assert written(0) == batch_answer(b0)
-    arpa_batch_update(b1, 1, state, model)
-    assert written(1) == batch_answer(b0.unionByName(b1))
-    # the fold genuinely moved the model: (a,b,c) count 2 -> 4 and new
-    # trigrams crossed the prune threshold
-    assert written(1) != written(0)
-    before = (written(0), written(1))
-    arpa_batch_update(b1, 1, state, model)   # replay idempotence
-    assert (written(0), written(1)) == before

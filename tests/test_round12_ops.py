@@ -175,58 +175,6 @@ def test_tokenizer_compression_laws(spark, monkeypatch):
             r["total_bytes"] * 1000 // r["n_tokens"])
 
 
-def test_winrate_stream_folds_like_batch(spark, tmp_path):
-    """Continuous win-matrix/Bradley-Terry monitor: after each batch
-    the written strength table equals the batch derivation
-    (pairwise_win_matrix + bradley_terry_fit) over the union of
-    batches so far — INCLUDING a pair whose two docs arrive in
-    different batches (the pending-side store completes it) — and
-    redelivering the last batch changes nothing."""
-    from hops_spark.ops.preference import (bradley_terry_fit,
-                                           pairwise_win_matrix)
-    from hops_spark.streaming import winrate_batch_update
-
-    b0 = _docs(spark, [
-        (0, "m", RICH), (1, "n", POOR),       # complete pair, m wins
-        (2, "n", POOR),                        # pair 1: half arrives
-    ])
-    b1 = _docs(spark, [
-        (3, "p", RICH),                        # pair 1 completes: p wins
-        (4, "n", RICH), (5, "p", POOR),        # pair 2: n wins
-    ])
-    state, out = str(tmp_path / "st"), str(tmp_path / "out")
-
-    def written(bid):
-        return sorted(tuple(r) for r in
-                      spark.read.parquet(f"{out}/batch={bid}").collect())
-
-    def batch_answer(df):
-        wm = pairwise_win_matrix(
-            cross_model_outcomes(scored_docs(df))).collect()
-        s = bradley_terry_fit(
-            [(r["model_a"], r["model_b"], r["wins_a"], r["wins_b"])
-             for r in wm])
-        wins, pairs = {}, {}
-        for r in wm:
-            wins[r["model_a"]] = wins.get(r["model_a"], 0) + r["wins_a"]
-            wins[r["model_b"]] = wins.get(r["model_b"], 0) + r["wins_b"]
-            pairs[r["model_a"]] = pairs.get(r["model_a"], 0) + r["n_pairs"]
-            pairs[r["model_b"]] = pairs.get(r["model_b"], 0) + r["n_pairs"]
-        return sorted((m, wins[m], pairs[m], s[m]) for m in s)
-
-    winrate_batch_update(b0, 0, state, out)
-    assert written(0) == batch_answer(b0)          # only the complete pair
-    winrate_batch_update(b1, 1, state, out)
-    assert written(1) == batch_answer(b0.unionByName(b1))
-    # the split pair (2, 3) really completed: p appears with a win
-    models = {r[0] for r in written(1)}
-    assert "p" in models
-    # replay idempotence: redeliver batch 1, nothing changes
-    before = (written(0), written(1))
-    winrate_batch_update(b1, 1, state, out)
-    assert (written(0), written(1)) == before
-
-
 def test_best_of_n_exact_subset_enumeration(spark):
     """The order-statistic identity equals literal enumeration of all
     C(4,k) subsets on a hand-built group, and the incomplete trailing

@@ -208,87 +208,6 @@ def test_label_propagation_self_vote_and_cc_agreement(spark):
     assert lpa == cc
 
 
-def test_attribution_stream_folds_like_batch(spark, tmp_path):
-    """Drained per-channel credit DELTAS summed over micro-batches must
-    equal the batch operator on the full log (same credit_by_channel
-    derivation; feeds split by event time). Planted paths: a batch-2
-    conversion whose window reaches back to a batch-1 touch (store
-    path), a same-batch touch (batch path), and a batch-1 touch
-    older than 7 days before the batch-2 conversion (pruned AND
-    ineligible). The store must hold exactly the trailing window after
-    the last batch, in a single committed epoch."""
-    import os
-
-    from hops_spark.ops.attribution import attribution_credit
-    from hops_spark.streaming import attribution_stream
-
-    t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
-
-    def ev(eid, uid, day_off, etype):
-        return (eid, uid, t0 + dt.timedelta(days=day_off), etype)
-
-    b1_rows = [
-        ev(1, 1, 0.0, "click"),      # > 7d before u1's conversion: stale
-        ev(2, 1, 5.0, "view"),       # in-window for the batch-2 conv
-        ev(3, 2, 5.5, "click"),
-        ev(4, 2, 6.0, "purchase"),   # batch-1 conversion, same-batch touch
-        ev(5, 3, 6.5, "signup"),
-    ]
-    b2_rows = [
-        ev(6, 1, 8.0, "click"),      # same-batch touch for eid 7
-        ev(7, 1, 9.0, "purchase"),   # window [2.0, 9.0): eids 2, 6 (not 1)
-        ev(8, 3, 9.5, "purchase"),   # u3: eid 5 via the store
-    ]
-    schema = "event_id long, user_id long, ts timestamp, event_type string"
-    b1 = spark.createDataFrame(b1_rows, schema)
-    b2 = spark.createDataFrame(b2_rows, schema)
-    full = spark.createDataFrame(b1_rows + b2_rows, schema)
-
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    state = str(tmp_path / "state")
-    credit = str(tmp_path / "credit")
-    b1.coalesce(1).write.parquet(str(feed / "b1"))
-    stream = (spark.readStream.schema(schema)
-                   .option("maxFilesPerTrigger", "1")
-                   .parquet(str(feed / "*")))
-    q = attribution_stream(stream, state, credit,
-                           str(tmp_path / "ck")).start()
-    q.processAllAvailable()
-    b2.coalesce(1).write.parquet(str(feed / "b2"))
-    q.processAllAvailable()
-    q.stop()
-
-    got = {r["channel"]: (r["n_touches"], r["linear_credit_ppm"],
-                          r["last_touch_convs"])
-           for r in spark.read.parquet(credit).groupBy("channel")
-               .agg(F.sum("n_touches").cast("long").alias("n_touches"),
-                    F.sum("linear_credit_ppm").cast("long")
-                     .alias("linear_credit_ppm"),
-                    F.sum("last_touch_convs").cast("long")
-                     .alias("last_touch_convs")).collect()}
-    want = {r["channel"]: (r["n_touches"], r["linear_credit_ppm"],
-                           r["last_touch_convs"])
-            for r in attribution_credit(full).collect()}
-    assert got == want
-    # sanity on the planted paths: u1's conversion split 500k/500k over
-    # view(2) + click(6); click 6 is the last touch; stale click 1 unused
-    assert want["view"][1] == 500_000 + 0
-    assert want["signup"] == (1, 1_000_000, 1)
-
-    # store: the replay-retention contract keeps the read epoch plus
-    # the written one (<= 2 dirs); the NEWEST is pruned to the trailing
-    # 7 days behind batch-2 max ts (day 9.5 -> cutoff day 2.5: eid 1
-    # gone)
-    epochs = sorted((int(d.split("=", 1)[1]) for d in os.listdir(state)
-                     if d.startswith("epoch=")))
-    assert 1 <= len(epochs) <= 2
-    kept = {r["touch_id"]
-            for r in spark.read.parquet(
-                os.path.join(state, f"epoch={epochs[-1]}")).collect()}
-    assert kept == {2, 3, 5, 6}
-
-
 def test_interval_overlap_join_exactly_once_vs_naive(spark):
     """Every overlapping pair appears EXACTLY once (no distinct pass)
     even when both intervals span several buckets; result set equals
@@ -338,50 +257,3 @@ def test_maxsim_ranks_exact_then_fuzzy_then_unrelated(spark):
                                 k=10).collect()}
     assert abs(out[1] - 3.0) < 1e-6
     assert out[1] > out[2] > out[3]
-
-
-def test_attribution_batch_update_replay_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering a batch that
-    already committed its store epoch and delta dir must change
-    NOTHING — the store read is capped at the batch's own id and every
-    write is keyed by batch_id with overwrite mode."""
-    import os
-
-    from hops_spark.streaming import attribution_batch_update
-
-    t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
-    schema = "event_id long, user_id long, ts timestamp, event_type string"
-    b0 = spark.createDataFrame(
-        [(1, 1, t0, "click"),
-         (2, 1, t0 + dt.timedelta(hours=1), "purchase")], schema)
-    b1 = spark.createDataFrame(
-        [(3, 1, t0 + dt.timedelta(hours=2), "view"),
-         (4, 1, t0 + dt.timedelta(hours=3), "purchase")], schema)
-    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
-
-    def snapshot():
-        deltas = sorted(tuple(r) for r in
-                        spark.read.parquet(credit)
-                        .select("channel", "n_touches",
-                                "linear_credit_ppm").collect())
-        epochs = sorted(int(d.split("=", 1)[1])
-                        for d in os.listdir(state)
-                        if d.startswith("epoch="))
-        store = sorted(r["touch_id"] for r in spark.read.parquet(
-            os.path.join(state, f"epoch={epochs[-1]}")).collect())
-        return deltas, epochs[-1], store
-
-    attribution_batch_update(b0, 0, state, credit)
-    attribution_batch_update(b1, 1, state, credit)
-    first = snapshot()
-    # replay the LAST batch (the only one foreachBatch can redeliver)
-    attribution_batch_update(b1, 1, state, credit)
-    assert snapshot() == first
-    # and the deltas fold to the batch answer: purchase 2 <- click 1,
-    # purchase 4 <- click 1 + view 3 (500k each)
-    d = {r["channel"]: (r["n_touches"], r["linear_credit_ppm"])
-         for r in spark.read.parquet(credit).groupBy("channel")
-             .agg(F.sum("n_touches").cast("long").alias("n_touches"),
-                  F.sum("linear_credit_ppm").cast("long")
-                   .alias("linear_credit_ppm")).collect()}
-    assert d == {"click": (2, 1_500_000), "view": (1, 500_000)}

@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from hops_spark import streaming as S
@@ -631,7 +635,7 @@ def test_mg_hitters_stream_folds_like_batch(spark, sf_dir, tmp_path):
     from hops_spark.io.readers import load_table
     from hops_spark.ops.sketch import mg_hashed_summary, mg_merge
     from hops_spark.ops.text import words
-    from hops_spark.streaming import mg_hitters_stream
+    from hops_spark.streaming import fold_stream, mg_hitters_batch_update
 
     k = 8
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -645,13 +649,14 @@ def test_mg_hitters_stream_folds_like_batch(spark, sf_dir, tmp_path):
     stream = (spark.readStream.schema("doc_id long, text string")
                    .option("maxFilesPerTrigger", "1")
                    .parquet(str(feed / "*")))
-    q = mg_hitters_stream(stream, state, str(tmp_path / "ck"), k=k).start()
+    q = fold_stream(stream, mg_hitters_batch_update, str(tmp_path / "ck"),
+                    state_dir=state, k=k).start()
     q.processAllAvailable()
     b2.coalesce(1).write.parquet(str(feed / "b2"))
     q.processAllAvailable()
     q.stop()
 
-    got = sorted(tuple(r) for r in spark.read.parquet(state).collect())
+    got = _newest_epoch(spark, state)[1]
 
     def summ(df):
         toks = df.select(F.explode(words("text")).alias("term"))
@@ -770,3 +775,468 @@ def test_decontaminate_stream_folds_like_batch(spark, sf_dir, tmp_path):
     planted = bench.orderBy("doc_id").limit(1).collect()[0]["doc_id"] + 500000
     by_id = {r[0]: r for r in got}
     assert by_id[planted][2] is True
+
+
+# --- epoch-committed foreachBatch stores: fold_stream + *_batch_update ----
+
+EVENT_SCHEMA = "event_id long, user_id long, ts timestamp, event_type string"
+RICH = "a perfectly ordinary sentence with many distinct words here"
+POOR = "zz zz zz"
+
+
+def _epochs(state_dir):
+    return sorted(int(d.split("=", 1)[1]) for d in os.listdir(state_dir)
+                  if d.startswith("epoch="))
+
+
+def _newest_epoch(spark, state_dir):
+    """(epoch, sorted rows) of the newest epoch dir of a store."""
+    e = _epochs(state_dir)[-1]
+    return e, sorted(tuple(r) for r in
+                     spark.read.parquet(f"{state_dir}/epoch={e}").collect())
+
+
+def _written(spark, out_dir):
+    """Reader of the per-batch artifact out_dir/batch=<bid>."""
+    def read(bid):
+        return sorted(tuple(r) for r in
+                      spark.read.parquet(f"{out_dir}/batch={bid}").collect())
+    return read
+
+
+def _assert_fold_law(update, batches, read, derive, state_dirs):
+    """The law of every epoch-committed store: after batch k the
+    artifact read(k) equals derive(union of batches 0..k); replaying
+    the last batch (the only one foreachBatch can redeliver) changes no
+    artifact; each store keeps at most 2 epochs. Returns the
+    artifacts."""
+    seen, arts = None, []
+    for bid, b in enumerate(batches):
+        update(b, bid)
+        seen = b if seen is None else seen.unionByName(b)
+        arts.append(read(bid))
+        assert arts[-1] == derive(seen)
+    update(batches[-1], len(batches) - 1)
+    assert [read(bid) for bid in range(len(batches))] == arts
+    assert all(len(_epochs(d)) <= 2 for d in state_dirs)
+    return arts
+
+
+def test_fold_policy_lives_in_one_place():
+    """The checkpointed foreachBatch policy has one home: hops_spark/
+    holds exactly one `foreachBatch(` call and one `isEmpty()` guard,
+    both in streaming.fold_stream, and one epoch-prune loop (the only
+    rmtree over `epoch=` dirs), in streaming._commit_epoch."""
+    import ast
+    import pathlib
+
+    import hops_spark
+
+    homes = {"foreachBatch(": [], "isEmpty()": [], "rmtree(": []}
+    for path in pathlib.Path(hops_spark.__file__).parent.rglob("*.py"):
+        src = path.read_text()
+        if not any(tok in src for tok in homes):
+            continue
+        lines = src.splitlines()
+        for node in ast.parse(src).body:   # every top-level statement
+            seg = "\n".join(lines[node.lineno - 1:node.end_lineno])
+            for tok, where in homes.items():
+                if tok == "rmtree(" and '"epoch="' not in seg:
+                    continue
+                where += [(path.name, getattr(node, "name", "<module>"))
+                          ] * seg.count(tok)
+    assert homes == {"foreachBatch(": [("streaming.py", "fold_stream")],
+                     "isEmpty()": [("streaming.py", "fold_stream")],
+                     "rmtree(": [("streaming.py", "_commit_epoch")]}
+
+
+def test_mg_hitters_batch_update_replay_idempotent(spark, tmp_path):
+    """A redelivered MG batch merges into the summary epoch it read,
+    never into its own output: b0, b1, then b1 again leaves exactly
+    mg_merge(summary(b0), summary(b1)), with <= 2 epochs on disk."""
+    from hops_spark.ops.sketch import mg_hashed_summary, mg_merge
+    from hops_spark.ops.text import words
+    from hops_spark.streaming import mg_hitters_batch_update
+
+    k = 2
+    b0 = spark.createDataFrame([(1, "a a a b c"), (2, "c e")],
+                               "doc_id long, text string")
+    b1 = spark.createDataFrame([(3, "a b b d"), (4, "b e")],
+                               "doc_id long, text string")
+    state = str(tmp_path / "mg")
+    for bid, b in ((0, b0), (1, b1), (1, b1)):
+        mg_hitters_batch_update(b, bid, state, k=k)
+
+    def summ(df):
+        toks = df.select(F.explode(words("text")).alias("term"))
+        return mg_hashed_summary(toks, "term", k=k)
+
+    want = sorted(tuple(r) for r in
+                  mg_merge(summ(b0), summ(b1), k=k).collect())
+    assert _newest_epoch(spark, state) == (2, want)
+    assert len(_epochs(state)) <= 2
+
+
+def test_attribution_fold_stream_restarts_from_checkpoint(spark, tmp_path):
+    """Drained per-channel credit DELTAS summed over micro-batches must
+    equal the batch operator on the full log (same credit_by_channel
+    derivation; feeds split by event time), across a stop and a
+    restart of ``fold_stream`` on the same checkpoint: the restarted
+    query resumes after batch 0 instead of reprocessing it. Planted
+    paths: a batch-2 conversion whose window reaches back to a batch-1
+    touch (store path), a same-batch touch (batch path), and a batch-1
+    touch older than 7 days before the batch-2 conversion (pruned AND
+    ineligible). The store must hold exactly the trailing window after
+    the last batch, in at most 2 epochs."""
+    from hops_spark.ops.attribution import attribution_credit
+    from hops_spark.streaming import attribution_batch_update, fold_stream
+
+    t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
+
+    def ev(eid, uid, day_off, etype):
+        return (eid, uid, t0 + dt.timedelta(days=day_off), etype)
+
+    b1_rows = [
+        ev(1, 1, 0.0, "click"),      # > 7d before u1's conversion: stale
+        ev(2, 1, 5.0, "view"),       # in-window for the batch-2 conv
+        ev(3, 2, 5.5, "click"),
+        ev(4, 2, 6.0, "purchase"),   # batch-1 conversion, same-batch touch
+        ev(5, 3, 6.5, "signup"),
+    ]
+    b2_rows = [
+        ev(6, 1, 8.0, "click"),      # same-batch touch for eid 7
+        ev(7, 1, 9.0, "purchase"),   # window [2.0, 9.0): eids 2, 6 (not 1)
+        ev(8, 3, 9.5, "purchase"),   # u3: eid 5 via the store
+    ]
+    b1 = spark.createDataFrame(b1_rows, EVENT_SCHEMA)
+    b2 = spark.createDataFrame(b2_rows, EVENT_SCHEMA)
+    full = spark.createDataFrame(b1_rows + b2_rows, EVENT_SCHEMA)
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    state = str(tmp_path / "state")
+    credit = str(tmp_path / "credit")
+    ckpt = str(tmp_path / "ck")
+
+    def start():
+        stream = (spark.readStream.schema(EVENT_SCHEMA)
+                       .option("maxFilesPerTrigger", "1")
+                       .parquet(str(feed / "*")))
+        return fold_stream(stream, attribution_batch_update, ckpt,
+                           state_dir=state, credit_dir=credit).start()
+
+    b1.coalesce(1).write.parquet(str(feed / "b1"))
+    q = start()
+    q.processAllAvailable()
+    q.stop()
+    b2.coalesce(1).write.parquet(str(feed / "b2"))
+    q = start()
+    q.processAllAvailable()
+    q.stop()
+    # the restart resumed after batch 0: b1 was not reprocessed
+    assert sorted(d for d in os.listdir(credit)
+                  if d.startswith("batch=")) == ["batch=0", "batch=1"]
+
+    got = {r["channel"]: (r["n_touches"], r["linear_credit_ppm"],
+                          r["last_touch_convs"])
+           for r in spark.read.parquet(credit).groupBy("channel")
+               .agg(F.sum("n_touches").cast("long").alias("n_touches"),
+                    F.sum("linear_credit_ppm").cast("long")
+                     .alias("linear_credit_ppm"),
+                    F.sum("last_touch_convs").cast("long")
+                     .alias("last_touch_convs")).collect()}
+    want = {r["channel"]: (r["n_touches"], r["linear_credit_ppm"],
+                           r["last_touch_convs"])
+            for r in attribution_credit(full).collect()}
+    assert got == want
+    # sanity on the planted paths: u1's conversion split 500k/500k over
+    # view(2) + click(6); click 6 is the last touch; stale click 1 unused
+    assert want["view"][1] == 500_000 + 0
+    assert want["signup"] == (1, 1_000_000, 1)
+
+    # store: the replay-retention contract keeps the read epoch plus
+    # the written one (<= 2 dirs); the NEWEST is pruned to the trailing
+    # 7 days behind batch-2 max ts (day 9.5 -> cutoff day 2.5: eid 1
+    # gone)
+    assert 1 <= len(_epochs(state)) <= 2
+    kept = {r[0] for r in _newest_epoch(spark, state)[1]}
+    assert kept == {2, 3, 5, 6}
+
+
+def test_attribution_batch_update_replay_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: re-delivering a batch that
+    already committed its store epoch and delta dir must change
+    NOTHING — the store read is capped at the batch's own id and every
+    write is keyed by batch_id with overwrite mode."""
+    from hops_spark.ops.attribution import attribution_credit
+    from hops_spark.streaming import attribution_batch_update
+
+    t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
+    b0 = spark.createDataFrame(
+        [(1, 1, t0, "click"),
+         (2, 1, t0 + dt.timedelta(hours=1), "purchase")], EVENT_SCHEMA)
+    b1 = spark.createDataFrame(
+        [(3, 1, t0 + dt.timedelta(hours=2), "view"),
+         (4, 1, t0 + dt.timedelta(hours=3), "purchase")], EVENT_SCHEMA)
+    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
+
+    def credit_so_far(bid):   # per-channel deltas of batches 0..bid
+        return {r["channel"]: (r["n_touches"], r["linear_credit_ppm"])
+                for r in spark.read.parquet(credit)
+                    .filter(F.col("batch") <= bid).groupBy("channel")
+                    .agg(F.sum("n_touches").cast("long").alias("n_touches"),
+                         F.sum("linear_credit_ppm").cast("long")
+                          .alias("linear_credit_ppm")).collect()}
+
+    def batch_answer(df):
+        return {r["channel"]: (r["n_touches"], r["linear_credit_ppm"])
+                for r in attribution_credit(df).collect()}
+
+    arts = _assert_fold_law(
+        lambda b, bid: attribution_batch_update(b, bid, state, credit),
+        [b0, b1], credit_so_far, batch_answer, [state])
+    # the deltas fold to the batch answer: purchase 2 <- click 1,
+    # purchase 4 <- click 1 + view 3 (500k each)
+    assert arts[-1] == {"click": (2, 1_500_000), "view": (1, 500_000)}
+    # the replay left the store at batch 1's epoch, touches 1 and 3
+    epoch, rows = _newest_epoch(spark, state)
+    assert (epoch, [r[0] for r in rows]) == (2, [1, 3])
+
+
+def test_attribution_late_batch_raises_or_counts(spark, tmp_path):
+    """A batch older than the store's prune cutoff diverges from the
+    batch operator; default is a loud error, strict_order=False writes
+    an observable _LATE_ROWS marker and proceeds."""
+    from hops_spark.streaming import attribution_batch_update
+
+    t0 = dt.datetime(2024, 3, 1)
+    b0 = spark.createDataFrame(
+        [(1, 1, t0, "click"),
+         (2, 1, t0 + dt.timedelta(days=30), "purchase")], EVENT_SCHEMA)
+    # b1 predates b0's cutoff (max_ts - 7d = t0 + 23d)
+    b1 = spark.createDataFrame(
+        [(3, 1, t0 + dt.timedelta(days=1), "view"),
+         (4, 1, t0 + dt.timedelta(days=31), "purchase")], EVENT_SCHEMA)
+    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
+    attribution_batch_update(b0, 0, state, credit)
+    with pytest.raises(ValueError, match="older than the store's prune"):
+        attribution_batch_update(b1, 1, state, credit)
+    attribution_batch_update(b1, 1, state, credit, strict_order=False)
+    marker = os.path.join(credit, "batch=1", "_LATE_ROWS")
+    assert os.path.exists(marker)
+    with open(marker) as f:
+        assert int(f.read()) == 1   # the late view, not the purchase
+    # in-order batches never produce the marker
+    b2 = spark.createDataFrame(
+        [(5, 1, t0 + dt.timedelta(days=32), "purchase")], EVENT_SCHEMA)
+    attribution_batch_update(b2, 2, state, credit)
+    assert not os.path.exists(os.path.join(credit, "batch=2", "_LATE_ROWS"))
+
+
+def test_attribution_missing_cutoff_recovered_from_store(spark, tmp_path):
+    """A committed non-seed epoch whose _CUTOFF marker is missing (the
+    crash window between parquet _SUCCESS and the marker write) must
+    still run the late-arrival check: the cutoff is recovered from
+    max(touch_ts) - window, so a late batch raises instead of being
+    silently accepted."""
+    from hops_spark.streaming import attribution_batch_update
+
+    t0 = dt.datetime(2024, 3, 1)
+    b0 = spark.createDataFrame(
+        [(1, 1, t0, "click"),
+         (2, 1, t0 + dt.timedelta(days=30), "click"),
+         (3, 1, t0 + dt.timedelta(days=30), "purchase")], EVENT_SCHEMA)
+    # b1 predates b0's cutoff (max_ts - 7d = t0 + 23d)
+    b1 = spark.createDataFrame(
+        [(4, 1, t0 + dt.timedelta(days=1), "view"),
+         (5, 1, t0 + dt.timedelta(days=31), "purchase")], EVENT_SCHEMA)
+    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
+    attribution_batch_update(b0, 0, state, credit)
+    # simulate the crash: epoch 1 committed (_SUCCESS present) but the
+    # _CUTOFF marker never landed
+    marker = os.path.join(state, "epoch=1", "_CUTOFF")
+    assert os.path.exists(marker)
+    os.remove(marker)
+    with pytest.raises(ValueError, match="older than the store's prune"):
+        attribution_batch_update(b1, 1, state, credit)
+    # the recovery is conservative: max(touch_ts)=t0+30d gives cutoff
+    # t0+23d here (equal to the true one since the max event was a
+    # touch); an in-order batch still sails through
+    b2 = spark.createDataFrame(
+        [(6, 1, t0 + dt.timedelta(days=32), "purchase")], EVENT_SCHEMA)
+    attribution_batch_update(b2, 1, state, credit)
+    assert not os.path.exists(os.path.join(credit, "batch=1", "_LATE_ROWS"))
+
+
+def test_attribution_seed_epoch_without_cutoff_still_unchecked(spark,
+                                                               tmp_path):
+    """Epoch 0 (seed_touch_state) legitimately has no _CUTOFF — nothing
+    was ever pruned from it, so batch 0 must NOT raise on old rows."""
+    from hops_spark.streaming import attribution_batch_update, seed_touch_state
+
+    t0 = dt.datetime(2024, 3, 1)
+    seed = spark.createDataFrame(
+        [(1, 1, t0 + dt.timedelta(days=40), "click")], EVENT_SCHEMA)
+    state, credit = str(tmp_path / "st"), str(tmp_path / "cr")
+    seed_touch_state(seed, state)
+    old = spark.createDataFrame(
+        [(2, 1, t0, "view"),
+         (3, 1, t0 + dt.timedelta(days=41), "purchase")], EVENT_SCHEMA)
+    attribution_batch_update(old, 0, state, credit)   # no raise
+    assert os.path.exists(os.path.join(credit, "batch=0"))
+
+
+def test_mixture_batch_update_folds_like_batch(spark, tmp_path):
+    """Online mixture controller: after each batch, the written
+    mixture equals the batch derivation over the UNION of batches so
+    far under the same frozen scorer (additivity of frozen-scored
+    stats), and redelivering the last batch changes nothing."""
+    from hops_spark.ops.mixture import (frozen_domain_stats,
+                                        mixture_from_domain_stats)
+    from hops_spark.streaming import (mixture_batch_update,
+                                      seed_mixture_scorer)
+
+    schema = "doc_id long, source string, text string"
+    ref = spark.createDataFrame(
+        [(900 + i, "ref", "one two three four five one two") for i in range(4)],
+        schema)
+    b0 = spark.createDataFrame(
+        [(1, "easy", "one two one two one two one"),
+         (2, "hard", "three five two four one three five")], schema)
+    b1 = spark.createDataFrame(
+        [(3, "easy", "one two one two one"),
+         (4, "hard", "five four three two one five four"),
+         (5, "easy", "two one two one two")], schema)
+    scorer_dir = str(tmp_path / "scorer")
+    state, mix = str(tmp_path / "st"), str(tmp_path / "mix")
+    seed_mixture_scorer(ref, scorer_dir)
+    scorer = spark.read.parquet(scorer_dir)
+
+    def batch_answer(df):
+        return sorted(tuple(r) for r in mixture_from_domain_stats(
+            frozen_domain_stats(df, scorer)).collect())
+
+    arts = _assert_fold_law(
+        lambda b, bid: mixture_batch_update(b, bid, state, mix,
+                                                   scorer_dir),
+        [b0, b1], _written(spark, mix), batch_answer, [state])
+    # weights stay a valid design at every step
+    w1 = {r[0]: r[-1] for r in arts[1]}
+    assert sum(w1.values()) == 1_000_000
+
+
+def test_calibration_batch_update_folds_like_batch(spark, tmp_path):
+    """Online calibration monitor: after each batch, the written
+    reliability table equals the shared batch derivation over the
+    UNION of batches so far under the same frozen weights (additivity
+    of per-bin sufficient stats), and redelivering the last batch
+    changes nothing."""
+    from hops_spark.ops.classify import (calibration_bin_stats,
+                                         calibration_from_bin_stats,
+                                         linear_probe_scores)
+    from hops_spark.streaming import (calibration_batch_update,
+                                      seed_probe_weights)
+
+    schema = "doc_id long, text string, y int"
+    ref = spark.createDataFrame(
+        [(900 + i, "good clean prose with many words", 1)
+         for i in range(3)]
+        + [(950 + i, "zz zz zz", 0) for i in range(3)], schema)
+    b0 = spark.createDataFrame(
+        [(1, "good clean prose with many words", 1),
+         (2, "zz zz zz", 0)], schema)
+    b1 = spark.createDataFrame(
+        [(3, "good clean words here", 1),
+         (4, "zz zz", 0),
+         (5, "prose with many words indeed", 1)], schema)
+    weights = str(tmp_path / "w")
+    state, calib = str(tmp_path / "st"), str(tmp_path / "cal")
+    seed_probe_weights(ref, weights, dim=16, seed="ct")
+    w = [int(r["w_micro"]) for r in
+         spark.read.parquet(weights).orderBy("feat").collect()]
+    assert len(w) == 17     # dim + bias
+
+    def batch_answer(df):
+        s = linear_probe_scores(df, w, dim=16, seed="ct")
+        return sorted(tuple(r) for r in calibration_from_bin_stats(
+            calibration_bin_stats(s, bins=10)).collect())
+
+    arts = _assert_fold_law(
+        lambda b, bid: calibration_batch_update(
+            b, bid, state, calib, weights, dim=16, seed="ct"),
+        [b0, b1], _written(spark, calib), batch_answer, [state])
+    # derived-table invariants: n = bin totals, gap = |conf - emp|
+    rows = arts[1]
+    assert sum(r[1] for r in rows) == 5
+    for r in rows:
+        assert r[5] == abs(r[3] - r[4])
+
+
+def test_arpa_batch_update_folds_like_batch(spark, tmp_path):
+    """Continuously-refreshed LM: after each batch, the written ARPA
+    table equals the batch export over the UNION of batches so far
+    (count additivity), and redelivering the last batch changes
+    nothing."""
+    from hops_spark.ops.lm import kn3_arpa, trigram_count_table
+    from hops_spark.streaming import arpa_batch_update
+
+    schema = "doc_id long, text string"
+    b0 = spark.createDataFrame([(1, "a b c a b c"), (2, "a b d e")], schema)
+    b1 = spark.createDataFrame([(3, "b c a b c"), (4, "c a b d")], schema)
+    state, model = str(tmp_path / "st"), str(tmp_path / "m")
+
+    def batch_answer(df):
+        return sorted(tuple(r) for r in
+                      kn3_arpa(trigram_count_table(df), prune3=2).collect())
+
+    arts = _assert_fold_law(
+        lambda b, bid: arpa_batch_update(b, bid, state, model),
+        [b0, b1], _written(spark, model), batch_answer, [state])
+    # the fold genuinely moved the model: (a,b,c) count 2 -> 4 and new
+    # trigrams crossed the prune threshold
+    assert arts[1] != arts[0]
+
+
+def test_winrate_batch_update_folds_like_batch(spark, tmp_path):
+    """Continuous win-matrix/Bradley-Terry monitor: after each batch
+    the written strength table equals the batch derivation
+    (pairwise_win_matrix + bradley_terry_fit) over the union of
+    batches so far — INCLUDING a pair whose two docs arrive in
+    different batches (the pending-side store completes it) — and
+    redelivering the last batch changes nothing."""
+    from hops_spark.ops.preference import (bradley_terry_fit,
+                                           cross_model_outcomes,
+                                           pairwise_win_matrix, scored_docs)
+    from hops_spark.streaming import winrate_batch_update
+
+    schema = "doc_id long, source string, text string"
+    b0 = spark.createDataFrame([
+        (0, "m", RICH), (1, "n", POOR),       # complete pair, m wins
+        (2, "n", POOR),                        # pair 1: half arrives
+    ], schema)
+    b1 = spark.createDataFrame([
+        (3, "p", RICH),                        # pair 1 completes: p wins
+        (4, "n", RICH), (5, "p", POOR),        # pair 2: n wins
+    ], schema)
+    state, out = str(tmp_path / "st"), str(tmp_path / "out")
+
+    def batch_answer(df):
+        wm = pairwise_win_matrix(
+            cross_model_outcomes(scored_docs(df))).collect()
+        s = bradley_terry_fit(
+            [(r["model_a"], r["model_b"], r["wins_a"], r["wins_b"])
+             for r in wm])
+        wins, pairs = {}, {}
+        for r in wm:
+            wins[r["model_a"]] = wins.get(r["model_a"], 0) + r["wins_a"]
+            wins[r["model_b"]] = wins.get(r["model_b"], 0) + r["wins_b"]
+            pairs[r["model_a"]] = pairs.get(r["model_a"], 0) + r["n_pairs"]
+            pairs[r["model_b"]] = pairs.get(r["model_b"], 0) + r["n_pairs"]
+        return sorted((m, wins[m], pairs[m], s[m]) for m in s)
+
+    arts = _assert_fold_law(
+        lambda b, bid: winrate_batch_update(b, bid, state, out),
+        [b0, b1], _written(spark, out), batch_answer,
+        [os.path.join(state, "pending"), os.path.join(state, "matrix")])
+    # the split pair (2, 3) really completed: p appears with a win
+    assert "p" in {r[0] for r in arts[1]}
