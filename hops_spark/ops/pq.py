@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hops_spark.ops.litfast import lit_array
+from hops_spark.ops.sort import top_k_per_group
 
 PQ_MICRO = 1_000_000
 
@@ -155,6 +156,47 @@ def pq_encode(df: DataFrame, codebook: Codebook, m: int = 8, k: int = 16,
                  .agg(F.sum(packed).alias("pq_code")))
 
 
+def _adc_table(qsubs: DataFrame, codebook: Codebook,
+               *keys: str) -> DataFrame:
+    """ADC lookup table: (keys..., sub, code, dpart) with dpart the
+    integer squared L2 of each query subvector to each centroid."""
+    cb_rows = [(s, c, list(v)) for (s, c), v in sorted(codebook.items())]
+    cb_df = qsubs.sparkSession.createDataFrame(
+        cb_rows, "sub int, code int, cv array<bigint>")
+    return (qsubs.join(F.broadcast(cb_df), "sub")
+                 .select(*keys, "sub", "code",
+                         F.aggregate(
+                             F.zip_with("sv", "cv",
+                                        lambda x, c: (x - c) * (x - c)),
+                             F.lit(0).cast("long"),
+                             lambda acc, x: acc + x).alias("dpart")))
+
+
+def _adc_top(scored: DataFrame, topk: int, id_col: str,
+             qid_col: str) -> DataFrame:
+    """Per-query top-``topk`` by (adc_dist, id), ranked as ``rank``."""
+    return top_k_per_group(scored, [qid_col], topk, "adc_dist", id_col,
+                           rank_col="rank", keep_rank=True)
+
+
+def _unpack_codes(pruned: DataFrame, m: int, k: int,
+                  id_col: str) -> DataFrame:
+    """(id, cell, sub, code) rows of the packed ``pq_code``:
+    floor(pq_code / 2^(bits*s)) % k, an exact dyadic shift."""
+    bits = max(1, (k - 1).bit_length())
+    return (pruned.select(
+        F.col(id_col), "cell",
+        F.explode(F.array(*[
+            F.struct(F.lit(s).alias("sub"),
+                     F.pmod(F.floor(F.col("pq_code")
+                                    / F.lit(float(1 << (bits * s))))
+                             .cast("long"),
+                            F.lit(k)).cast("int").alias("code"))
+            for s in range(m)])).alias("_sc"))
+        .select(F.col(id_col), "cell", F.col("_sc.sub").alias("sub"),
+                F.col("_sc.code").alias("code")))
+
+
 def pq_adc_topk(df: DataFrame, queries: DataFrame, codebook: Codebook,
                 m: int = 8, k: int = 16, d: int = 64, topk: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding",
@@ -171,28 +213,16 @@ def pq_adc_topk(df: DataFrame, queries: DataFrame, codebook: Codebook,
     join, the per-(q, vec) sum is one keyed aggregate, and the top-k is
     a per-query window. The original corpus vectors are never read at
     probe time — the PQ promise."""
-    spark = df.sparkSession
     coded = (pq_subvectors(df, m, d, id_col, vec_col)
              .withColumn("code", _assign_code(codebook, m, k))
              .select(F.col(id_col), "sub", "code"))
-    cb_rows = [(s, c, list(v)) for (s, c), v in sorted(codebook.items())]
-    cb_df = spark.createDataFrame(
-        cb_rows, "sub int, code int, cv array<bigint>")
-    qsubs = pq_subvectors(queries, m, d, qid_col, vec_col)
-    dtab = (qsubs.join(F.broadcast(cb_df), "sub")
-                 .select(F.col(qid_col), "sub", "code",
-                         F.aggregate(
-                             F.zip_with("sv", "cv",
-                                        lambda x, c: (x - c) * (x - c)),
-                             F.lit(0).cast("long"),
-                             lambda acc, x: acc + x).alias("dpart")))
+    dtab = _adc_table(pq_subvectors(queries, m, d, qid_col, vec_col),
+                      codebook, qid_col)
     scored = (coded.join(F.broadcast(dtab), ["sub", "code"])
                    .groupBy(qid_col, id_col)
                    .agg(F.sum("dpart").alias("adc_dist")))
-    w = Window.partitionBy(qid_col).orderBy("adc_dist", id_col)
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= topk)
-                  .select(qid_col, "rank", id_col, "adc_dist"))
+    return (_adc_top(scored, topk, id_col, qid_col)
+            .select(qid_col, "rank", id_col, "adc_dist"))
 
 
 # --- IVF-PQ: the FAISS serving composition (coarse cells + PQ codes) ---
@@ -229,7 +259,7 @@ def probe_pq_cell_index(spark, index_dir: str,
                         qvec_col: str = "q_vec"
                         ) -> tuple[DataFrame, list[int]]:
     """Probe the IVF-PQ index: per query the nprobe nearest coarse
-    cells (probe_cell_index's literal-codebook path), scan statically
+    cells (ops/similarity.probe_cells), scan statically
     pruned to the probed cell partitions, codes UNPACKED with exact
     dyadic shifts (floor(code / 2^(bits*s)) % k — pow-of-two division
     is an exponent shift, rule-of-house portable), then ADC: the
@@ -237,50 +267,23 @@ def probe_pq_cell_index(spark, index_dir: str,
     unpacked (sub, code) rows and one keyed sum ranks candidates.
     Self-matches are excluded (the ann_probe convention). Returns
     (top-k DataFrame, probed cell ids) so callers can assert pruning."""
-    from hops_spark.ops.similarity import _cell_sims
+    from hops_spark.ops.similarity import probe_cells, scan_cells
     vectors = spark.read.parquet(index_dir)
-    probes = F.slice(F.reverse(F.array_sort(
-        _cell_sims(F.col(qvec_col), centroids))), 1, nprobe)
-    qb = (queries.withColumn("_p", F.explode(probes))
-                 .select(qid_col, qvec_col,
-                         F.col("_p.cell").alias("cell")))
-    cells_needed = sorted(r["cell"] for r in
-                          qb.select("cell").distinct().collect())
-    pruned = vectors.where(F.col("cell").isin(cells_needed))
-    bits = max(1, (k - 1).bit_length())
-    unpacked = (pruned.select(
-        F.col(id_col), "cell",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("sub"),
-                     F.pmod(F.floor(F.col("pq_code")
-                                    / F.lit(float(1 << (bits * s))))
-                             .cast("long"),
-                            F.lit(k)).cast("int").alias("code"))
-            for s in range(m)])).alias("_sc"))
-        .select(F.col(id_col), "cell", F.col("_sc.sub").alias("sub"),
-                F.col("_sc.code").alias("code")))
-    cb_rows = [(s, c, list(v)) for (s, c), v in sorted(codebook.items())]
-    cb_df = spark.createDataFrame(
-        cb_rows, "sub int, code int, cv array<bigint>")
-    qsubs = pq_subvectors(queries, m, d, qid_col, qvec_col)
-    dtab = (qsubs.join(F.broadcast(cb_df), "sub")
-                 .select(F.col(qid_col), "sub", "code",
-                         F.aggregate(
-                             F.zip_with("sv", "cv",
-                                        lambda x, c: (x - c) * (x - c)),
-                             F.lit(0).cast("long"),
-                             lambda acc, x: acc + x).alias("dpart")))
+    qb = probe_cells(queries.select(qid_col, qvec_col), centroids, nprobe,
+                     qvec_col)
+    pruned, cells_needed = scan_cells(vectors, qb)
+    unpacked = _unpack_codes(pruned, m, k, id_col)
+    dtab = _adc_table(pq_subvectors(queries, m, d, qid_col, qvec_col),
+                      codebook, qid_col)
     qcells = qb.select(qid_col, "cell").distinct()
     scored = (unpacked.join(F.broadcast(qcells), "cell")
                       .filter(F.col(id_col) != F.col(qid_col))
                       .join(F.broadcast(dtab), [qid_col, "sub", "code"])
                       .groupBy(qid_col, id_col)
                       .agg(F.sum("dpart").alias("adc_dist")))
-    w = Window.partitionBy(qid_col).orderBy("adc_dist", id_col)
-    top = (scored.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= topk)
-                 .select(qid_col, "rank",
-                         F.col(id_col).alias("neighbor_id"), "adc_dist"))
+    top = (_adc_top(scored, topk, id_col, qid_col)
+           .select(qid_col, "rank", F.col(id_col).alias("neighbor_id"),
+                   "adc_dist"))
     return top, cells_needed
 
 
@@ -400,29 +403,13 @@ def probe_residual_pq(spark, index_dir: str,
     correct IVFADC distance. Table size n_q * nprobe * m * k rows
     (bounded), broadcast; scan pruned to probed cells; candidates never
     read a float vector."""
-    from hops_spark.ops.similarity import _cell_sims
+    from hops_spark.ops.similarity import probe_cells, scan_cells
     vectors = spark.read.parquet(index_dir)
-    probes = F.slice(F.reverse(F.array_sort(
-        _cell_sims(F.col(qvec_col), centroids))), 1, nprobe)
-    qb = (queries.withColumn("_p", F.explode(probes))
-                 .select(qid_col, qvec_col,
-                         F.col("_p.cell").cast("long").alias("cell")))
-    cells_needed = sorted(r["cell"] for r in
-                          qb.select("cell").distinct().collect())
-    pruned = vectors.where(F.col("cell").isin(cells_needed))
-    bits = max(1, (k - 1).bit_length())
+    qb = probe_cells(queries.select(qid_col, qvec_col), centroids, nprobe,
+                     qvec_col).withColumn("cell", F.col("cell").cast("long"))
+    pruned, cells_needed = scan_cells(vectors, qb)
+    unpacked = _unpack_codes(pruned, m, k, id_col)
     ds = d // m
-    unpacked = (pruned.select(
-        F.col(id_col), "cell",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("sub"),
-                     F.pmod(F.floor(F.col("pq_code")
-                                    / F.lit(float(1 << (bits * s))))
-                             .cast("long"),
-                            F.lit(k)).cast("int").alias("code"))
-            for s in range(m)])).alias("_sc"))
-        .select(F.col(id_col), "cell", F.col("_sc.sub").alias("sub"),
-                F.col("_sc.code").alias("code")))
     # per-(query, cell) residual subvectors
     cmap = centroid_micro_map(centroids)
     qm = F.transform(F.col(qvec_col),
@@ -436,23 +423,12 @@ def probe_residual_pq(spark, index_dir: str,
               .select(F.col(qid_col), "cell", "sub",
                       F.slice("_qr", F.col("sub") * ds + 1, ds)
                        .alias("sv")))
-    cb_rows = [(s, c, list(v)) for (s, c), v in sorted(codebook.items())]
-    cb_df = spark.createDataFrame(
-        cb_rows, "sub int, code int, cv array<bigint>")
-    dtab = (qres.join(F.broadcast(cb_df), "sub")
-                .select(F.col(qid_col), "cell", "sub", "code",
-                        F.aggregate(
-                            F.zip_with("sv", "cv",
-                                       lambda x, c: (x - c) * (x - c)),
-                            F.lit(0).cast("long"),
-                            lambda acc, x: acc + x).alias("dpart")))
+    dtab = _adc_table(qres, codebook, qid_col, "cell")
     scored = (unpacked.join(F.broadcast(dtab), ["cell", "sub", "code"])
                       .filter(F.col(id_col) != F.col(qid_col))
                       .groupBy(qid_col, id_col)
                       .agg(F.sum("dpart").alias("adc_dist")))
-    w = Window.partitionBy(qid_col).orderBy("adc_dist", id_col)
-    top = (scored.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= topk)
-                 .select(qid_col, "rank",
-                         F.col(id_col).alias("neighbor_id"), "adc_dist"))
+    top = (_adc_top(scored, topk, id_col, qid_col)
+           .select(qid_col, "rank", F.col(id_col).alias("neighbor_id"),
+                   "adc_dist"))
     return top, cells_needed

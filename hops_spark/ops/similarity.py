@@ -5,11 +5,12 @@
   — JVM-side, no Python. Elements are cast to double first so Spark and
   the DuckDB oracle fold in identical IEEE double arithmetic
   (left-to-right over the array).
-- ``knn_bruteforce``: exact top-k neighbors for a set of query vectors
-  — broadcast the queries, one pass over the corpus, per-query top-k
-  heap (window row_number). This is the correctness baseline.
-- ``knn_lsh``: the scale path — random-hyperplane LSH bucketing: only
-  vectors sharing a probe bucket are scored. Hyperplanes are
+- Every kNN path is its own candidate step (cross join, LSH bucket,
+  IVF cell from ``probe_cells``, shortlist) plus one shared exact
+  step: ``cosine_pairs`` scores the pairs, ``top_k_neighbors`` ranks
+  them per query (via ``ops/sort.top_k_per_group``).
+- ``knn_bruteforce`` is the exact baseline; ``knn_lsh`` scores only
+  vectors sharing a random-hyperplane bucket. Hyperplanes are
   deterministic (md5-seeded ±1 component signs) so results are
   reproducible and oracle-checkable.
 
@@ -27,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hops_spark.ops.litfast import lit_array
+from hops_spark.ops.sort import top_k_per_group
 
 
 def _dbl(v: Column) -> Column:
@@ -95,6 +97,40 @@ def guard_query_panel(queries: DataFrame, caller: str) -> None:
             "exact sweep")
 
 
+def cosine_pairs(corpus: DataFrame, queries: DataFrame,
+                 on: str | None = None, id_col: str = "vec_id",
+                 vec_col: str = "embedding", qid_col: str = "q_id",
+                 qvec_col: str = "q_vec") -> DataFrame:
+    """Score every (corpus, query) candidate pair: broadcast queries,
+    cross join (``on`` None) or equi-join on the candidate key ``on``;
+    drop the self pair; add ``neighbor_id`` (= id_col) and ``cos_sim =
+    round(cosine, 6)``, keeping every input column. Both norms are
+    hoisted below the join (one dot fold per pair, ``cosine_pre``); an
+    input that already carries ``_nc`` / ``_nq`` has it reused."""
+    if "_nc" not in corpus.columns:
+        corpus = corpus.withColumn("_nc", norm(F.col(vec_col)))
+    if "_nq" not in queries.columns:
+        queries = queries.withColumn("_nq", norm(F.col(qvec_col)))
+    q = F.broadcast(queries)
+    pairs = corpus.crossJoin(q) if on is None else corpus.join(q, on)
+    return (pairs.filter(F.col(id_col) != F.col(qid_col))
+                 .withColumn("neighbor_id", F.col(id_col))
+                 .withColumn("cos_sim",
+                             F.round(cosine_pre(F.col(vec_col),
+                                                F.col(qvec_col),
+                                                F.col("_nc"), F.col("_nq")),
+                                     6)))
+
+
+def top_k_neighbors(scored: DataFrame, k: int,
+                    qid_col: str = "q_id") -> DataFrame:
+    """Per-query top-k of scored pairs by (cos_sim desc, neighbor_id
+    asc) — the one kNN ranking, with its 1-based rank kept as ``rnk``."""
+    return top_k_per_group(scored, [qid_col], k, F.col("cos_sim").desc(),
+                           F.col("neighbor_id").asc(), rank_col="rnk",
+                           keep_rank=True)
+
+
 def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    qid_col: str = "q_id", qvec_col: str = "q_vec",
@@ -108,22 +144,10 @@ def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
     recall (knn_recall) on bounded query panels."""
     if not allow_large:
         guard_query_panel(queries, "knn_bruteforce")
-    # norms hoisted below the join: once per corpus row / query row,
-    # not once per (corpus x query) pair — cosine_pre is bit-identical
-    scored = (corpus.withColumn("_nc", norm(F.col(vec_col)))
-                    .crossJoin(F.broadcast(
-                        queries.withColumn("_nq", norm(F.col(qvec_col)))))
-                    .filter(F.col(id_col) != F.col(qid_col))
-                    .select(F.col(qid_col),
-                            F.col(id_col).alias("neighbor_id"),
-                            F.round(cosine_pre(F.col(vec_col),
-                                               F.col(qvec_col),
-                                               F.col("_nc"), F.col("_nq")),
-                                    6).alias("cos_sim")))
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-                  .filter(F.col("rnk") <= k))
+    scored = cosine_pairs(corpus, queries, None, id_col, vec_col,
+                          qid_col, qvec_col)
+    return top_k_neighbors(scored.select(qid_col, "neighbor_id", "cos_sim"),
+                           k, qid_col)
 
 
 def hyperplane_signs(dim: int, plane: int, seed: int = 42) -> list[int]:
@@ -158,20 +182,14 @@ def knn_lsh(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
     is tunable via n_planes (fewer planes → bigger buckets → higher
     recall, more compute). Bucket assignment is one narrow pass; the
     join co-partitions on bucket — no all-pairs shuffle."""
-    cb = (corpus.withColumn("_bucket", lsh_bucket(F.col(vec_col), dim, n_planes, seed))
-                .withColumn("_nc", norm(F.col(vec_col))))
-    qb = (queries.withColumn("_bucket", lsh_bucket(F.col(qvec_col), dim, n_planes, seed))
-                 .withColumn("_nq", norm(F.col(qvec_col))))
-    scored = (cb.join(F.broadcast(qb), "_bucket")
-                .filter(F.col(id_col) != F.col(qid_col))
-                .select(F.col(qid_col), F.col(id_col).alias("neighbor_id"),
-                        F.round(cosine_pre(F.col(vec_col), F.col(qvec_col),
-                                           F.col("_nc"), F.col("_nq")), 6)
-                         .alias("cos_sim")))
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-                  .filter(F.col("rnk") <= k))
+    cb = corpus.withColumn("_bucket",
+                           lsh_bucket(F.col(vec_col), dim, n_planes, seed))
+    qb = queries.withColumn("_bucket",
+                            lsh_bucket(F.col(qvec_col), dim, n_planes, seed))
+    scored = cosine_pairs(cb, qb, "_bucket", id_col, vec_col, qid_col,
+                          qvec_col)
+    return top_k_neighbors(scored.select(qid_col, "neighbor_id", "cos_sim"),
+                           k, qid_col)
 
 
 def embedding_near_dup(corpus: DataFrame, dim: int, threshold: float = 0.95,
@@ -365,6 +383,30 @@ def two_level_cell(vec: Column, centroids: list[tuple[int, list[float]]],
         .getField("cell")
 
 
+def probe_cells(queries: DataFrame,
+                centroids: list[tuple[int, list[float]]], nprobe: int,
+                qvec_col: str = "q_vec") -> DataFrame:
+    """One row per (query, probed cell) for each query's ``nprobe``
+    nearest cells by (rounded sim desc, larger cell id) — the build
+    assignment's order. Adds ``_nq`` (the query norm) and ``cell``."""
+    nearest = F.slice(F.reverse(F.array_sort(
+        _cell_sims(F.col(qvec_col), centroids, F.col("_nq")))), 1, nprobe)
+    return (queries.withColumn("_nq", norm(F.col(qvec_col)))
+                   .withColumn("_p", F.explode(nearest))
+                   .withColumn("cell", F.col("_p.cell"))
+                   .drop("_p"))
+
+
+def scan_cells(vectors: DataFrame, probed: DataFrame
+               ) -> tuple[DataFrame, list[int]]:
+    """(scan of ``vectors`` pruned to ``probed``'s cells, sorted cell
+    ids): the ≤ n_queries × nprobe ids are collected and become a
+    literal IN filter — static partition pruning."""
+    cells = sorted(r["cell"] for r in
+                   probed.select("cell").distinct().collect())
+    return vectors.where(F.col("cell").isin(cells)), cells
+
+
 def knn_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
             n_cells: int = 16, nprobe: int = 2,
             id_col: str = "vec_id", vec_col: str = "embedding",
@@ -385,23 +427,12 @@ def knn_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
     from hops_spark.ops.dedup import fan_out
     cb = (fan_out(corpus.select(id_col, vec_col), id_col)
                 .withColumn("_nc", norm(F.col(vec_col)))
-                .withColumn("_cell", cell_of))
-    probes = F.slice(F.reverse(F.array_sort(
-        _cell_sims(F.col(qvec_col), cents, F.col("_nq")))), 1, nprobe)
-    qb = (queries.withColumn("_nq", norm(F.col(qvec_col)))
-                 .withColumn("_p", F.explode(probes))
-                 .select(qid_col, qvec_col, "_nq",
-                         F.col("_p.cell").alias("_cell")))
-    scored = (cb.join(F.broadcast(qb), "_cell")
-                .filter(F.col(id_col) != F.col(qid_col))
-                .select(F.col(qid_col), F.col(id_col).alias("neighbor_id"),
-                        F.round(cosine_pre(F.col(vec_col), F.col(qvec_col),
-                                           F.col("_nc"), F.col("_nq")), 6)
-                         .alias("cos_sim")))
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-                  .filter(F.col("rnk") <= k))
+                .withColumn("cell", cell_of))
+    qb = probe_cells(queries.select(qid_col, qvec_col), cents, nprobe,
+                     qvec_col)
+    scored = cosine_pairs(cb, qb, "cell", id_col, vec_col, qid_col, qvec_col)
+    return top_k_neighbors(scored.select(qid_col, "neighbor_id", "cos_sim"),
+                           k, qid_col)
 
 
 def semantic_dedup(corpus: DataFrame, dim: int, n_clusters: int = 16,
@@ -538,26 +569,18 @@ def rerank_exact(corpus: DataFrame, queries: DataFrame,
     bounded by construction (n_queries x R rows), so it BROADCASTS into
     the full-precision source table: the scan stays a keyed semi-style
     lookup of R ids per query, never a rescan of the corpus. Output
-    (q_id, neighbor_id, cos_sim, rnk) with the (rounded cosine desc,
-    neighbor id) tie-break — the knn_bruteforce ordering, so a rerank
-    over an all-inclusive shortlist degenerates to exact kNN."""
-    cand = shortlist.select(F.col(qid_col), F.col("neighbor_id"))
-    scored = (corpus.select(F.col(id_col).alias("neighbor_id"),
-                            F.col(vec_col).alias("_cv"))
-                    .withColumn("_nc", norm(F.col("_cv")))
-                    .join(F.broadcast(cand), "neighbor_id")
-                    .join(F.broadcast(queries.select(qid_col, qvec_col)
-                                             .withColumn("_nq",
-                                                         norm(F.col(qvec_col)))),
-                          qid_col)
-                    .select(F.col(qid_col), "neighbor_id",
-                            F.round(cosine_pre(F.col("_cv"), F.col(qvec_col),
-                                               F.col("_nc"), F.col("_nq")), 6)
-                             .alias("cos_sim")))
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-                  .filter(F.col("rnk") <= k))
+    (q_id, neighbor_id, cos_sim, rnk) scored and ranked like
+    knn_bruteforce (self pair dropped), so a rerank over an
+    all-inclusive shortlist degenerates to exact kNN."""
+    cand = shortlist.select(F.col(qid_col),
+                            F.col("neighbor_id").alias(id_col))
+    rows = (corpus.select(id_col, vec_col)
+                  .withColumn("_nc", norm(F.col(vec_col)))
+                  .join(F.broadcast(cand), id_col))
+    scored = cosine_pairs(rows, queries.select(qid_col, qvec_col), qid_col,
+                          id_col, vec_col, qid_col, qvec_col)
+    return top_k_neighbors(scored.select(qid_col, "neighbor_id", "cos_sim"),
+                           k, qid_col)
 
 
 def quantize_int8(df: DataFrame, id_col: str = "vec_id",
@@ -702,16 +725,9 @@ def probe_cell_index(spark, index_dir: str,
             T.StructField(qvec_col, queries.schema[qvec_col].dataType),
             T.StructField("cell", T.LongType())]))
     else:
-        probes = F.slice(F.reverse(F.array_sort(
-            _cell_sims(F.col(qvec_col), centroids, F.col("_nq")))),
-            1, nprobe)
-        qb = (queries.withColumn("_nq", norm(F.col(qvec_col)))
-                     .withColumn("_p", F.explode(probes))
-                     .select(qid_col, qvec_col,
-                             F.col("_p.cell").alias("cell")))
-    cells_needed = sorted(r["cell"] for r in
-                          qb.select("cell").distinct().collect())
-    pruned = vectors.where(F.col("cell").isin(cells_needed))
+        qb = probe_cells(queries.select(qid_col, qvec_col), centroids,
+                         nprobe, qvec_col)
+    pruned, cells_needed = scan_cells(vectors, qb)
     # Lifecycle: rows deleted since the last compaction are masked by
     # the tombstone side-set (broadcast — small between compactions by
     # contract). Applied AFTER partition pruning so the scan stays
@@ -721,22 +737,11 @@ def probe_cell_index(spark, index_dir: str,
         pruned = pruned.join(F.broadcast(tomb), id_col, "left_anti")
     deq = F.transform(F.col("q_int8"),
                       lambda x: x.cast("double") * F.col("scale") / 127.0)
-    scored = (pruned.filter(F.col("scale") > 0)
-                    .withColumn("_dv", deq)
-                    .withColumn("_nd", norm(F.col("_dv")))
-                    .join(F.broadcast(qb.withColumn("_nqv",
-                                                    norm(F.col(qvec_col)))),
-                          "cell")
-                    .filter(F.col(id_col) != F.col(qid_col))
-                    .select(F.col(qid_col),
-                            F.col(id_col).alias("neighbor_id"),
-                            F.round(cosine_pre(F.col("_dv"), F.col(qvec_col),
-                                               F.col("_nd"), F.col("_nqv")),
-                                    6).alias("cos_sim")))
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    top = (scored.withColumn("rnk", F.row_number().over(w))
-                 .filter(F.col("rnk") <= k))
+    scored = cosine_pairs(pruned.filter(F.col("scale") > 0)
+                                .withColumn("_dv", deq),
+                          qb, "cell", id_col, "_dv", qid_col, qvec_col)
+    top = top_k_neighbors(scored.select(qid_col, "neighbor_id", "cos_sim"),
+                          k, qid_col)
     return top, cells_needed
 
 
@@ -898,30 +903,14 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 10,
     apply to the probe result — this op is the exact-eval face the
     recall checks need."""
     if not allow_large:
-        n_q = queries.limit(BRUTEFORCE_MAX_QUERIES + 1).count()
-        if n_q > BRUTEFORCE_MAX_QUERIES:
-            raise ValueError(
-                f"hard_negatives: {n_q}+ queries exceeds the eval guard "
-                f"({BRUTEFORCE_MAX_QUERIES}); mine negatives from the "
-                "IVF/PQ shortlist at serving scale, or pass "
-                "allow_large=True for a deliberate exact sweep")
-    scored = (corpus.withColumn("_nc", norm(F.col(vec_col)))
-                    .crossJoin(F.broadcast(
-                        queries.withColumn("_nq", norm(F.col(qvec_col)))))
-                    .filter(F.col(id_col) != F.col(qid_col))
-                    .filter(F.col(label_col) != F.col(qlabel_col))
-                    .select(F.col(qid_col),
-                            F.col(id_col).alias("neighbor_id"),
-                            F.col(label_col).alias("neg_label"),
-                            F.round(cosine_pre(F.col(vec_col),
-                                               F.col(qvec_col),
-                                               F.col("_nc"), F.col("_nq")),
-                                    6).alias("cos_sim"))
-                    .filter(F.col("cos_sim") < dup_threshold))
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-                  .filter(F.col("rnk") <= k))
+        guard_query_panel(queries, "hard_negatives")
+    scored = (cosine_pairs(corpus, queries, None, id_col, vec_col, qid_col,
+                           qvec_col)
+              .filter(F.col(label_col) != F.col(qlabel_col))
+              .select(F.col(qid_col), "neighbor_id",
+                      F.col(label_col).alias("neg_label"), "cos_sim")
+              .filter(F.col("cos_sim") < dup_threshold))
+    return top_k_neighbors(scored, k, qid_col)
 
 
 def knn_bruteforce_gemm(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -1004,23 +993,10 @@ def knn_bruteforce_gemm(corpus: DataFrame, queries: DataFrame, k: int = 10,
                                schema="q_id_c long, neighbor_id_c long")
                   .distinct())
     # exact re-score of the candidate set with the scalar-path formula
-    rescored = (corpus.select(F.col(id_col), F.col(vec_col))
-                .withColumn("_nc", norm(F.col(vec_col)))
-                .join(F.broadcast(cand),
-                      F.col(id_col) == F.col("neighbor_id_c"))
-                .join(F.broadcast(queries.withColumn(
-                          "_nq", norm(F.col(qvec_col)))),
-                      F.col("q_id_c") == F.col(qid_col))
-                .filter(F.col(id_col) != F.col(qid_col))
-                .select(F.col(qid_col),
-                        F.col(id_col).alias("neighbor_id"),
-                        F.round(cosine_pre(F.col(vec_col), F.col(qvec_col),
-                                           F.col("_nc"), F.col("_nq")), 6)
-                         .alias("cos_sim")))
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    return (rescored.withColumn("rnk", F.row_number().over(w))
-                    .filter(F.col("rnk") <= k))
+    shortlist = cand.select(F.col("q_id_c").alias(qid_col),
+                            F.col("neighbor_id_c").alias("neighbor_id"))
+    return rerank_exact(corpus, queries, shortlist, k, id_col, vec_col,
+                        qid_col, qvec_col)
 
 
 # --------------------------------------------------------------------------
@@ -1150,24 +1126,17 @@ def knn_multiprobe(corpus: DataFrame, queries: DataFrame, in_dim: int,
     """
     cb = (jl_project(corpus, vec_col, in_dim, bucket_bits)
           .withColumn("_bucket", srp_bucket(bucket_bits))
-          .select(id_col, vec_col, "_bucket")
-          .withColumn("_nc", norm(F.col(vec_col))))
+          .select(id_col, vec_col, "_bucket"))
     qb = (jl_project(queries, qvec_col, in_dim, bucket_bits)
-          .withColumn("_probe", F.explode(multiprobe_keys(bucket_bits, nprobe)))
-          .select(qid_col, qvec_col, "_probe")
-          .withColumn("_nq", norm(F.col(qvec_col))))
-    cand = (cb.join(F.broadcast(qb), cb["_bucket"] == qb["_probe"])
-              .filter(F.col(id_col) != F.col(qid_col)))
-    scored = cand.select(
-        F.col(qid_col), F.col(id_col).alias("neighbor_id"),
-        F.round(cosine_pre(F.col(vec_col), F.col(qvec_col),
-                           F.col("_nc"), F.col("_nq")), 6).alias("cos_sim"))
-    wq = Window.partitionBy(qid_col)
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col("neighbor_id").asc())
-    return (scored.withColumn("n_cand", F.count("*").over(wq))
-                  .withColumn("rnk", F.row_number().over(w))
-                  .filter(F.col("rnk") <= k))
+          .withColumn("_bucket",
+                      F.explode(multiprobe_keys(bucket_bits, nprobe)))
+          .select(qid_col, qvec_col, "_bucket"))
+    scored = (cosine_pairs(cb, qb, "_bucket", id_col, vec_col, qid_col,
+                           qvec_col)
+              .select(qid_col, "neighbor_id", "cos_sim")
+              .withColumn("n_cand",
+                          F.count("*").over(Window.partitionBy(qid_col))))
+    return top_k_neighbors(scored, k, qid_col)
 
 
 def assign_cells_gemm(corpus: DataFrame, centroids: list,

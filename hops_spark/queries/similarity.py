@@ -439,20 +439,17 @@ def adaptive_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         SHORTLIST_K)
         .select("q_id", "neighbor_id",
                 F.col("rnk").cast("long").alias("prefix_rnk")))
-    from pyspark.sql.window import Window
-    rer = (short.join(corpus.withColumnRenamed("vec_id", "neighbor_id"),
-                      "neighbor_id")
-                .join(F.broadcast(queries), "q_id")
-                .select("q_id", "neighbor_id", "prefix_rnk",
-                        F.round(SIM.cosine(F.col("embedding"),
-                                           F.col("q_vec")), 6)
-                         .alias("cos_sim")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(),
-                                           F.col("neighbor_id"))
-    return (rer.withColumn("rnk", F.row_number().over(w).cast("long"))
-               .filter(F.col("rnk") <= K)
-               .select("q_id", "neighbor_id", "cos_sim", "rnk",
-                       "prefix_rnk")
+    # the shortlist streams into the vector lookup (not rerank_exact's
+    # broadcast of it): the rerank window then keeps short's q_id
+    # partitioning and prefix_rnk rides along without a join back
+    rer = SIM.cosine_pairs(
+        short.join(corpus.withColumnRenamed("vec_id", "neighbor_id"),
+                   "neighbor_id"),
+        queries, "q_id", id_col="neighbor_id")
+    return (SIM.top_k_neighbors(rer.select("q_id", "neighbor_id", "cos_sim",
+                                           "prefix_rnk"), K)
+               .select("q_id", "neighbor_id", "cos_sim",
+                       F.col("rnk").cast("long").alias("rnk"), "prefix_rnk")
                .orderBy("q_id", "rnk"))
 
 
@@ -1945,10 +1942,8 @@ def mp_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter over one cached frame; only the cheap top-k/count jobs run
     per curve point (first draft rebuilt the multiprobe pipeline per
     nprobe: 25 s -> ~8 s at sf0.01)."""
-    from pyspark.sql.window import Window
-
-    from hops_spark.ops.similarity import (cosine, jl_project,
-                                           multiprobe_keys, srp_bucket)
+    from hops_spark.ops.similarity import (jl_project, multiprobe_keys,
+                                           srp_bucket)
 
     e = load_table(spark, sf_dir, "embeddings")
     corpus = e.select("vec_id", "embedding")
@@ -1961,29 +1956,18 @@ def mp_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_np = max(MP_CURVE)
     cb = (jl_project(corpus, "embedding", DIM, MP_BITS)
           .withColumn("_bucket", srp_bucket(MP_BITS))
-          .select("vec_id", "embedding", "_bucket")
-          .withColumn("_nc", SIM.norm(F.col("embedding"))))
+          .select("vec_id", "embedding", "_bucket"))
     qb = (jl_project(queries, "q_vec", DIM, MP_BITS)
           .select("q_id", "q_vec",
                   F.posexplode(multiprobe_keys(MP_BITS, max_np))
-                   .alias("_pr", "_probe"))
-          .withColumn("_nq", SIM.norm(F.col("q_vec"))))
-    scored = (cb.join(F.broadcast(qb), cb["_bucket"] == qb["_probe"])
-                .filter(F.col("vec_id") != F.col("q_id"))
-                .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                        F.round(SIM.cosine_pre(F.col("embedding"),
-                                               F.col("q_vec"),
-                                               F.col("_nc"), F.col("_nq")),
-                                6).alias("cos_sim"),
-                        "_pr")
-                .localCheckpoint(eager=True))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(),
-                                           F.col("neighbor_id").asc())
+                   .alias("_pr", "_bucket")))
+    scored = (SIM.cosine_pairs(cb, qb, "_bucket")
+                 .select("q_id", "neighbor_id", "cos_sim", "_pr")
+                 .localCheckpoint(eager=True))
     out = None
     for np_ in MP_CURVE:
         c = scored.filter(F.col("_pr") < np_)
-        top = (c.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= K))
+        top = SIM.top_k_neighbors(c, K)
         hits = exact.join(top.select("q_id", "neighbor_id"),
                           ["q_id", "neighbor_id"], "left_semi").count()
         total_cand = c.count()

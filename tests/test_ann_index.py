@@ -11,7 +11,7 @@ import sys
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from ann_index import build, query  # noqa: E402
+from ann_index import build, partition_pruned, query  # noqa: E402
 
 
 def test_ann_index_build_and_probe(spark, sf_dir, tmp_path):
@@ -28,6 +28,10 @@ def test_ann_index_build_and_probe(spark, sf_dir, tmp_path):
 
     q = query(spark, idx, k=3, nprobe=2, n_queries=4)
     assert q["cells_probed"] and len(q["cells_probed"]) <= 8
+    # the probe scan is pruned; an unfiltered read of the index is not
+    assert q["partition_pruned"] is True
+    assert not partition_pruned(
+        spark.read.parquet(os.path.join(idx, "vectors")))
     per_query = {}
     for r in q["results"]:
         per_query.setdefault(r["q_id"], []).append(r)
@@ -80,8 +84,8 @@ def test_probe_cell_index_scan_is_partition_pruned(spark, sf_dir, tmp_path):
     # plan-level pruning evidence on the pruned scan itself
     vectors = spark.read.parquet(idx)
     pruned = vectors.where(F.col("cell").isin(probed))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
+    assert partition_pruned(pruned)
+    assert not partition_pruned(vectors)
     n_cells_on_disk = len([d for d in __import__("os").listdir(idx)
                            if d.startswith("cell=")])
     # selectedPartitions: compare scanned file count vs total

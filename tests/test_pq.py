@@ -202,7 +202,8 @@ def test_streaming_pq_ingest_equals_batch_build(spark, tmp_path):
 def test_rerank_over_full_shortlist_is_exact_knn(spark):
     """rerank_exact over an all-inclusive shortlist must reproduce
     knn_bruteforce exactly (same rounded-cosine ordering and
-    tie-break) — the degeneracy that pins the rerank's semantics."""
+    tie-break, self pair dropped) — the degeneracy that pins the
+    rerank's semantics. The shortlist includes each query's own row."""
     from hops_spark.ops.similarity import knn_bruteforce, rerank_exact
 
     d = _vecs(spark, n=60)
@@ -211,7 +212,6 @@ def test_rerank_over_full_shortlist_is_exact_knn(spark):
                   F.col("embedding").alias("q_vec")))
     exact = knn_bruteforce(d, q, k=5)
     allshort = (d.crossJoin(q.select("q_id"))
-                 .filter(F.col("vec_id") != F.col("q_id"))
                  .select("q_id", F.col("vec_id").alias("neighbor_id")))
     rer = rerank_exact(d, q, allshort, k=5)
     cols = ["q_id", "neighbor_id", "cos_sim", "rnk"]

@@ -4,7 +4,9 @@ embedding dedup (ops/similarity.semantic_dedup)."""
 from __future__ import annotations
 
 import math
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from hops_spark.ops import retrieval as R
@@ -223,24 +225,66 @@ def test_make_training_shards_job(spark, sf_dir, tmp_path):
     assert {r["doc_id"] for r in train.select("doc_id").collect()} > set()
 
 
-def test_knn_bruteforce_eval_guard(spark):
-    """The brute-force path is eval-only by CONTRACT: a query panel over
-    the guard raises unless explicitly opted in."""
-    import pytest as _pytest
-
+@pytest.mark.parametrize("op, kwargs", [
+    ("knn_bruteforce", {}),
+    ("hard_negatives", {"dup_threshold": 1.0}),
+], ids=["knn_bruteforce", "hard_negatives"])
+def test_knn_bruteforce_eval_guard(spark, op, kwargs):
+    """The brute-force paths are eval-only by CONTRACT: a query panel
+    over the guard raises unless explicitly opted in, and the opt-in
+    scores that same panel."""
     from hops_spark.ops import similarity as S
 
+    fn = getattr(S, op)
     corpus = spark.range(4).select(
         F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0), F.col("id").cast("double")).alias("embedding"))
-    big_panel = spark.range(S.BRUTEFORCE_MAX_QUERIES + 5).select(
+        F.array(F.lit(1.0), F.col("id").cast("double")).alias("embedding"),
+        (F.col("id") % 2).cast("int").alias("label"))
+    n_q = S.BRUTEFORCE_MAX_QUERIES + 5
+    big_panel = spark.range(100, 100 + n_q).select(
         F.col("id").alias("q_id"),
-        F.array(F.lit(1.0), F.lit(0.0)).alias("q_vec"))
-    with _pytest.raises(ValueError, match="eval guard"):
-        S.knn_bruteforce(corpus, big_panel, k=2)
-    # explicit opt-in still works
-    out = S.knn_bruteforce(corpus, big_panel.limit(3), k=2)
-    assert out.count() == 6
+        F.array(F.lit(1.0), F.lit(0.0)).alias("q_vec"),
+        F.lit(0).alias("q_label"))
+    with pytest.raises(ValueError, match="eval guard"):
+        fn(corpus, big_panel, k=2, **kwargs)
+    # explicit opt-in on the same panel: 2 neighbors per query
+    # (hard_negatives: the two label-1 vectors, ids 1 and 3)
+    out = fn(corpus, big_panel, k=2, allow_large=True, **kwargs)
+    assert out.count() == 2 * n_q
+
+
+def test_knn_family_shares_one_probe_score_rank_path():
+    """Structural guard: the similarity ops rank through
+    ``top_k_neighbors`` (ops/sort.top_k_per_group) — no ``row_number``
+    call and no ordered per-query window of their own — and the
+    query-side nearest-cells probe expression lives only in
+    ``probe_cells``, across ops/similarity.py, ops/pq.py and
+    tools/ann_index.py."""
+    import ast
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = re.compile(r'F\.slice\(F\.reverse\(F\.array_sort\('
+                       r'_cell_sims\(F\.col\("?q_?vec')
+
+    def probe_sites(rel):
+        src = open(os.path.join(root, rel)).read()
+        return [f.name for f in ast.parse(src).body
+                if isinstance(f, ast.FunctionDef) and probe.search(
+                    re.sub(r"\s+", "", ast.get_source_segment(src, f)))]
+
+    assert probe_sites("hops_spark/ops/similarity.py") == ["probe_cells"]
+    assert probe_sites("hops_spark/ops/pq.py") == []
+    assert probe_sites("tools/ann_index.py") == []
+
+    src = open(os.path.join(root, "hops_spark/ops/similarity.py")).read()
+    assert "F.row_number(" not in src
+    # no Window.partitionBy(...).orderBy(...): a hand-typed rank window
+    ordered = [n.lineno for n in ast.walk(ast.parse(src))
+               if isinstance(n, ast.Attribute) and n.attr == "orderBy"
+               and isinstance(n.value, ast.Call)
+               and getattr(n.value.func, "attr", None) == "partitionBy"]
+    assert ordered == []
 
 
 def test_kmv_sketch_merge_and_estimate_properties(spark):

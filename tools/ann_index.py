@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -41,8 +42,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from hops_spark.ops.similarity import (_cell_sims, cosine, ivf_centroids,
-                                       ivf_kmeans_refine, quantize_int8)
+from hops_spark.ops.similarity import (_cell_sims, cosine_pairs,
+                                       ivf_centroids, ivf_kmeans_refine,
+                                       probe_cells, quantize_int8,
+                                       scan_cells, top_k_neighbors)
 from hops_spark.session import get_spark
 
 
@@ -69,6 +72,15 @@ def build(spark, sf_dir: str, index_dir: str, n_cells: int = 16) -> dict:
             "n_vectors": n, "n_cells": n_cells}
 
 
+def partition_pruned(df) -> bool:
+    """True when a scan in ``df``'s plan has a non-empty
+    ``PartitionFilters: [...]`` naming ``cell`` (an unfiltered read
+    prints ``PartitionFilters: []``)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return any("cell" in f
+               for f in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan))
+
+
 def query(spark, index_dir: str, k: int = 5, nprobe: int = 2,
           n_queries: int = 5) -> dict:
     with open(os.path.join(index_dir, "manifest.json")) as f:
@@ -84,35 +96,15 @@ def query(spark, index_dir: str, k: int = 5, nprobe: int = 2,
                     .collect())
     # probe cells per query, then ONE pruned scan covering the union of
     # probed cells
-    panel_df = spark.createDataFrame(panel)
-    probed = (panel_df.withColumn(
-                  "_p", F.explode(F.slice(
-                      F.reverse(F.array_sort(
-                          _cell_sims(F.col("q_vec"), cents))), 1, nprobe)))
-              .select("q_id", "q_vec", F.col("_p.cell").alias("cell")))
-    cells_needed = sorted({r["cell"] for r in
-                           probed.select("cell").distinct().collect()})
-    pruned = vectors.where(F.col("cell").isin(cells_needed))
-    scored = (pruned.join(F.broadcast(probed), "cell")
-                    .filter(F.col("vec_id") != F.col("q_id"))
-                    .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                            F.round(cosine(F.col("embedding"),
-                                           F.col("q_vec")), 6)
-                             .alias("cos_sim")))
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(),
-                                           F.col("neighbor_id").asc())
-    top = (scored.withColumn("rnk", F.row_number().over(w))
-                 .filter(F.col("rnk") <= k))
-    results = [{"q_id": r["q_id"], "neighbor_id": r["neighbor_id"],
-                "cos_sim": r["cos_sim"], "rnk": r["rnk"]}
-               for r in top.orderBy("q_id", "rnk").collect()]
-    # partition pruning evidence: the scan must read only probed cells
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    probed = probe_cells(spark.createDataFrame(panel), cents, nprobe)
+    pruned, cells_needed = scan_cells(vectors, probed)
+    scored = cosine_pairs(pruned, probed, "cell")
+    top = top_k_neighbors(scored.select("q_id", "neighbor_id", "cos_sim"), k)
+    results = [r.asDict() for r in top.orderBy("q_id", "rnk").collect()]
     return {"job": "ann_index_query", "index": index_dir, "k": k,
             "nprobe": nprobe, "cells_probed": cells_needed,
             "n_cells": manifest["n_cells"],
-            "partition_pruned": "PartitionFilters" in plan or "cell" in plan,
+            "partition_pruned": partition_pruned(pruned),
             "results": results}
 
 
@@ -169,14 +161,11 @@ def query_pq(spark, index_dir: str, topk: int = 5, nprobe: int = 2,
         spark, os.path.join(index_dir, "vectors"), cents, cb, queries,
         m=m, k=k, d=d, topk=shortlist_k, nprobe=nprobe)
     if rerank:
-        rer = rerank_exact(src, queries, top, k=topk)
-        results = [{"q_id": r["q_id"], "neighbor_id": r["neighbor_id"],
-                    "cos_sim": r["cos_sim"], "rnk": r["rnk"]}
-                   for r in rer.orderBy("q_id", "rnk").collect()]
+        out, rank = rerank_exact(src, queries, top, k=topk), "rnk"
     else:
-        results = [{"q_id": r["q_id"], "neighbor_id": r["neighbor_id"],
-                    "adc_dist": r["adc_dist"], "rank": r["rank"]}
-                   for r in top.orderBy("q_id", "rank").collect()]
+        out, rank = top.select("q_id", "neighbor_id", "adc_dist",
+                               "rank"), "rank"
+    results = [r.asDict() for r in out.orderBy("q_id", rank).collect()]
     return {"job": "ann_index_query_pq", "index": index_dir,
             "topk": topk, "nprobe": nprobe, "rerank": rerank,
             "cells_probed": cells, "n_cells": manifest["n_cells"],
