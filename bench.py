@@ -31,6 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from hops_spark.io.readers import load_table
 from hops_spark.registry import load_all
 from hops_spark.session import get_spark
 
@@ -165,7 +166,7 @@ def main() -> None:
     names = list(specs) if "--all" in sys.argv else HEADLINE
 
     # warm the JVM + parquet footers + the Python (Arrow UDF) worker pool
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    load_table(spark, sf_dir, "region").count()
     spark.range(32).mapInPandas(lambda it: it, "id long") \
          .write.format("noop").mode("overwrite").save()
     # ...and the full shuffle/codegen path of the heaviest query shape:

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hops_spark.io.readers import load_table
+
 INODE_SCHEMA = T.StructType([
     T.StructField("inode_id", T.LongType(), False),
     T.StructField("parent", T.StringType(), True),
@@ -53,7 +55,7 @@ def inodes_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic inode tree derived from the documents fixture:
     source → directory, document → file (name='doc_<id>', size=n_chars).
     Used by the oracle-gated §2.11 queries."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = load_table(spark, sf_dir, "documents")
     files = d.select(F.col("doc_id").alias("inode_id"),
                      F.col("source").alias("parent"),
                      F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("name"),

@@ -1,10 +1,26 @@
 """Source readers (SURVEY.md §2.1).
 
 The testdata tables are parquet; ``load_table`` is the canonical scan —
-a plain ``spark.read.parquet`` so Catalyst gets predicate pushdown,
-column pruning, and small-file coalescing for free (the Spark-native
+a ``spark.read.parquet`` so Catalyst gets predicate pushdown, column
+pruning, and small-file coalescing for free (the Spark-native
 equivalents of SequenceFileInputFilter / CombineFileInputFormat, see
 SURVEY.md §2.1 and §4).
+
+Table schemas are resident, as Hops keeps file metadata resident in its
+database rather than going back to the blocks. A bare
+``spark.read.parquet`` infers the schema from the footers, which runs a
+one-task Spark job on every call. ``load_table`` runs that inference once
+per path and remembers the ``StructType``; later calls read with
+``spark.read.schema(schema).parquet(path)``, which runs no job. The entry
+of a path is keyed on
+- the path's file fingerprint: the sorted ``(name, size, mtime_ns)`` of
+  its entries, so a table rewritten in place is inferred afresh;
+- the session's schema-affecting parquet confs (``_SCHEMA_CONFS``).
+Only the schema is remembered, never the DataFrame: each call must build a
+fresh relation with fresh attribute ids, or a query that loads one table
+twice and self-joins it would hit ambiguous attributes. A path with a
+non-``file`` URI scheme, or one ``os.stat`` cannot reach, keeps the
+inferring read, the only one that works there.
 
 Also provides the text-shaped scans mirroring the reference's input
 formats: line scan (TextInputFormat), KV-line scan
@@ -17,6 +33,10 @@ mapreduce/lib/input/SequenceFileInputFilter.java:49,111,154,203).
 
 from __future__ import annotations
 
+import os
+import stat
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -25,8 +45,69 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 
+# parquet confs that change the schema inference reads from the footers
+_SCHEMA_CONFS = ("spark.sql.legacy.parquet.nanosAsLong",
+                 "spark.sql.parquet.binaryAsString",
+                 "spark.sql.parquet.int96AsTimestamp",
+                 "spark.sql.parquet.inferTimestampNTZ.enabled",
+                 "spark.sql.parquet.mergeSchema")
+# path -> (file fingerprint, schema confs, inferred schema)
+_schemas: dict[str, tuple[tuple, tuple, T.StructType]] = {}
+
+
+def _entries(top: str, prefix: str = ""):
+    for e in os.scandir(top):
+        st = e.stat()
+        yield prefix + e.name, st.st_size, st.st_mtime_ns
+        if e.is_dir():
+            yield from _entries(e.path, prefix + e.name + "/")
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """Sorted ``(name, size, mtime_ns)`` of the files under a local
+    ``path`` (the file itself when it is one); None when the path has a
+    non-``file`` URI scheme or ``os.stat`` cannot reach it."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = url.path if url.scheme else path
+    try:
+        st = os.stat(local)
+        if stat.S_ISDIR(st.st_mode):
+            return tuple(sorted(_entries(local)))
+        return ((os.path.basename(local), st.st_size, st.st_mtime_ns),)
+    except OSError:
+        return None
+
+
+def _read(spark: SparkSession, path: str) -> tuple[DataFrame, T.StructType]:
+    fp = _fingerprint(path)
+    if fp is None:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    hit = _schemas.get(path)
+    if hit is not None and hit[0] == fp and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path), hit[2]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    _schemas[path] = (fp, confs, schema)
+    return df, schema
+
+
+def table_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The parquet schema ``load_table`` reads ``path`` with: the raw
+    footer types under the session's confs, from the same memo."""
+    return _read(spark, path)[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Canonical parquet scan of a driver testdata table.
+    """Canonical parquet scan of a fixture table. The schema is
+    inferred on the first call for a path and read from the memo
+    afterwards, keyed on the table's file fingerprint and the schema
+    confs; only the ``StructType`` is kept, so every call returns a fresh
+    relation (a self-join of two loads resolves). A non-local path keeps
+    the inferring read.
 
     Some fixture generations store `events.ts` as TIMESTAMP(NANOS), which
     Spark's vectorized parquet reader rejects; for those we read nanos as
@@ -36,11 +117,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     actual column type so both work."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df, schema = _read(spark, f"{sf_dir}/{name}.parquet")
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
@@ -143,8 +223,6 @@ def read_auto(spark: SparkSession, path: str) -> DataFrame:
     sniff the on-disk format and dispatch the right reader. Detection:
     SequenceFile magic bytes ('SEQ') in any data file → sequence file;
     parquet footer magic ('PAR1') → parquet; otherwise line text."""
-    import os
-
     def first_data_file(p: str) -> str | None:
         if os.path.isfile(p):
             return p

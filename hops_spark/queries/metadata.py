@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hops_spark.catalog.metastore import inodes_from_documents, subtree_delete
+from hops_spark.io.readers import load_table
 from hops_spark.registry import register
 
 _DUCK_INODES = """
@@ -503,7 +504,7 @@ def meta_inline_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the metadata row — zero extra I/O — while larger files report
     served_from_db=false (their read would consult blocks/replicas,
     cf. meta_block_report)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = load_table(spark, sf_dir, "documents")
     ino = (d.select(
             F.col("source").alias("parent"),
             F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("name"),
@@ -1020,7 +1021,6 @@ def distcp_preserve_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("maintenance", "coding"),
 )
 def xor_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hops_spark.io.readers import load_table
     from hops_spark.maintenance import xor_parity
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     blocks = d.select(
@@ -1131,7 +1131,6 @@ def _rs_oracle_sql() -> str:
     tags=("maintenance", "coding"),
 )
 def rs_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hops_spark.io.readers import load_table
     from hops_spark.maintenance import rs_encode
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hx = F.md5("text")
@@ -1222,7 +1221,6 @@ def _rs_repair_oracle_sql() -> str:
     tags=("maintenance", "coding"),
 )
 def rs_repair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hops_spark.io.readers import load_table
     from hops_spark.maintenance import rs_encode, rs_reconstruct
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hx = F.md5("text")
@@ -1310,7 +1308,6 @@ def rs_repair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("maintenance", "coding"),
 )
 def src_local_repair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hops_spark.io.readers import load_table
     from hops_spark.maintenance import src_encode, src_repair_local
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hx = F.md5("text")

@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hops_spark.io.readers import table_schema
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType([
         T.StructField("event_id", T.LongType(), True),
@@ -38,8 +41,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     so the stream schema follows a one-time batch footer sniff, exactly
     like io/readers.load_table."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = (spark.read.parquet(f"{sf_dir}/events.parquet")
-               .schema["ts"].dataType)
+    ts_type = table_schema(spark, f"{sf_dir}/events.parquet")["ts"].dataType
     raw = (spark.readStream.schema(_events_schema(ts_type))
            .option("maxFilesPerTrigger", max_files_per_trigger)
            .option("pathGlobFilter", "events.parquet")  # source needs a dir

@@ -6,8 +6,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from hops_spark.io.readers import (filter_md5, filter_percent, filter_regex,
+from hops_spark.io import readers
+from hops_spark.io.readers import (TABLES, filter_md5, filter_percent,
+                                   filter_regex, load_table,
                                    multi_input_union, read_fixed_width,
                                    read_kv_lines, read_lines)
 from hops_spark.io.writers import compact, write_kv_text, write_partitioned
@@ -55,6 +58,70 @@ def test_scan_filters(spark):
     assert 0 < pf.count() < 100
     mf = filter_md5(df, "id", 4)
     assert 0 < mf.count() < 100
+
+
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+def test_repeat_load_table_runs_no_job(spark, sf_dir):
+    """The table's schema is resident after the first load: a second
+    load_table of the same table runs no footer-inference job."""
+    sc = spark.sparkContext
+    load_table(spark, sf_dir, "orders")
+    sc.setJobGroup("load-table-repeat", "memoized load_table")
+    try:
+        load_table(spark, sf_dir, "orders")
+        jobs = list(sc.statusTracker().getJobIdsForGroup("load-table-repeat"))
+    finally:
+        sc.setJobGroup("", "")
+    assert jobs == []
+
+
+def test_load_table_matches_inferring_read(spark, sf_dir, monkeypatch):
+    """Every fixture table reads with the same schema and rows as a bare
+    spark.read.parquet (plus the events nanos rule), on the first call
+    that infers the schema and on the memoized call."""
+    monkeypatch.setattr(readers, "_schemas", {})
+    for name in TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        for call in ("first", "memoized"):
+            got = load_table(spark, sf_dir, name)
+            assert path in readers._schemas, (name, call)
+            want = spark.read.parquet(path)
+            if name == "events" \
+                    and isinstance(want.schema["ts"].dataType, T.LongType):
+                want = want.withColumn(
+                    "ts", F.timestamp_micros(F.expr("ts div 1000")))
+            assert got.schema == want.schema, (name, call)
+            assert _rows(got) == _rows(want), (name, call)
+
+
+def test_load_table_sees_table_rewritten_in_place(spark, tmp_path):
+    """A table overwritten at the same path with other columns reads with
+    its new schema and rows, not the remembered ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"b": ["x", "y", "z"], "c": [1.5, 2.5, 3.5]}),
+                   path)
+    back = load_table(spark, str(tmp_path), "t")
+    assert back.columns == ["b", "c"]
+    assert sorted(map(tuple, back.collect())) == \
+        [("x", 1.5), ("y", 2.5), ("z", 3.5)]
+
+
+def test_load_table_self_join_resolves(spark, sf_dir):
+    """Two loads of one table are two relations with their own attribute
+    ids, so a self-join of them resolves unambiguously."""
+    a = load_table(spark, sf_dir, "nation")
+    b = load_table(spark, sf_dir, "nation")
+    pairs = (a.join(b, a["n_regionkey"] == b["n_regionkey"])
+              .where(a["n_nationkey"] < b["n_nationkey"])
+              .select(a["n_name"], b["n_name"].alias("peer")))
+    assert pairs.count() == 5 * (5 * 4 // 2)
 
 
 def test_write_partitioned_routes(spark, tmp_path):

@@ -322,3 +322,46 @@ def test_plan_audit_counts_union_children(spark):
     df.collect()
     assert union_children(_plan(df).split("== Initial Plan ==")[0]) == 5
     assert union_children(_plan(spark.range(3))) == 0
+
+
+# A final adaptive plan with four exchange nodes, the last a reuse of the
+# second: the aggregate's shuffle is read by both sides of a self-join.
+_REUSED_EXCHANGE_PLAN = """\
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   ResultQueryStage 5
+   +- *(7) HashAggregate(keys=[], functions=[count(1)], output=[count#20L])
+      +- ShuffleQueryStage 4
+         +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=190]
+            +- *(6) HashAggregate(keys=[], functions=[partial_count(1)], output=[count#22L])
+               +- AQEShuffleRead coalesced
+                  +- ShuffleQueryStage 3
+                     +- Exchange rangepartitioning(k#1L ASC NULLS FIRST, 8), ENSURE_REQUIREMENTS, [plan_id=173]
+                        +- *(5) SortMergeJoin [k#1L], [k#6L], Inner
+                           :- *(3) Sort [k#1L ASC NULLS FIRST], false, 0
+                           :  +- *(3) HashAggregate(keys=[g#8L], functions=[count(1)], output=[k#1L, count#2L])
+                           :     +- AQEShuffleRead coalesced
+                           :        +- ShuffleQueryStage 0
+                           :           +- Exchange hashpartitioning(g#8L, 8), ENSURE_REQUIREMENTS, [plan_id=96]
+                           :              +- *(1) Range (0, 100, step=1, splits=4)
+                           +- *(4) Sort [k#6L ASC NULLS FIRST], false, 0
+                              +- *(4) HashAggregate(keys=[g#9L], functions=[count(1)], output=[k#6L, count#7L])
+                                 +- AQEShuffleRead coalesced
+                                    +- ShuffleQueryStage 2
+                                       +- ReusedExchange [g#9L, count#11L], Exchange hashpartitioning(g#8L, 8), ENSURE_REQUIREMENTS, [plan_id=96]
+"""
+
+
+def test_plan_audit_skips_reused_exchanges():
+    """tools/plan_audit.shuffle_exchanges counts only exchange nodes that
+    run a shuffle: the reused exchange line names an ``Exchange`` too but
+    adds none (a plain substring count reads 5)."""
+    import os
+    import sys
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools"))
+    from plan_audit import shuffle_exchanges
+
+    assert _REUSED_EXCHANGE_PLAN.count("Exchange") == 5
+    assert shuffle_exchanges(_REUSED_EXCHANGE_PLAN) == 3

@@ -42,6 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from hops_spark.io.readers import load_table
 from hops_spark.ops.similarity import (_cell_sims, cosine_pairs,
                                        ivf_centroids, ivf_kmeans_refine,
                                        probe_cells, quantize_int8,
@@ -50,8 +51,7 @@ from hops_spark.session import get_spark
 
 
 def build(spark, sf_dir: str, index_dir: str, n_cells: int = 16) -> dict:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-        .select("vec_id", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = ivf_kmeans_refine(emb, ivf_centroids(emb, n_cells))
     cell_of = F.array_max(_cell_sims(F.col("embedding"), cents)) \
         .getField("cell")
@@ -115,8 +115,7 @@ def build_pq(spark, sf_dir: str, index_dir: str, n_cells: int = 16,
     parquet (8 bytes of codes vs 256 bytes of float32). Both books go
     into the JSON manifest — they are the whole model."""
     from hops_spark.ops.pq import build_pq_cell_index, pq_train
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-        .select("vec_id", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     d = len(emb.select("embedding").first()[0])
     cents = ivf_kmeans_refine(emb, ivf_centroids(emb, n_cells))
     cb = pq_train(emb, m=m, k=k, d=d, iters=iters)
@@ -151,7 +150,7 @@ def query_pq(spark, index_dir: str, topk: int = 5, nprobe: int = 2,
     cb = {(int(s), int(c)): [int(x) for x in v]
           for s, c, v in manifest["pq_codebook"]}
     m, k, d = manifest["m"], manifest["k"], manifest["d"]
-    src = spark.read.parquet(f"{manifest['sf_dir']}/embeddings.parquet") \
+    src = load_table(spark, manifest["sf_dir"], "embeddings") \
         .select("vec_id", "embedding")
     queries = (src.orderBy("vec_id").limit(n_queries)
                   .select(F.col("vec_id").alias("q_id"),

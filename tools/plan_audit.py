@@ -69,21 +69,39 @@ _BOUNDED_SINGLE_PARTITION_OK = {
 }
 
 
+def _nodes(plan: str) -> list[tuple[int, str]]:
+    """(column, node text) of each line of a plan's tree string: the text
+    starts after the ``:- ``/``+- `` branch markers, with any ``*(n) ``
+    codegen-stage prefix dropped."""
+    out = []
+    for ln in plan.splitlines():
+        start = len(ln) - len(ln.lstrip(" :+-|"))
+        out.append((start, re.sub(r"^\*\(\d+\) ", "", ln[start:])))
+    return out
+
+
 def union_children(plan: str) -> int:
     """Total children of every Union node in a plan's tree string. A
     node's children are the lines right below it whose node text starts
-    3 columns deeper (after a ``:- `` or ``+- `` branch marker)."""
-    lines = plan.splitlines()
-    starts = [len(ln) - len(ln.lstrip(" :+-|")) for ln in lines]
+    3 columns deeper."""
+    nodes = _nodes(plan)
     total = 0
-    for i, ln in enumerate(lines):
-        if not re.sub(r"^\*\(\d+\) ", "", ln[starts[i]:]).startswith("Union"):
+    for i, (start, text) in enumerate(nodes):
+        if not text.startswith("Union"):
             continue
-        for j in range(i + 1, len(lines)):
-            if starts[j] <= starts[i]:
+        for child, _ in nodes[i + 1:]:
+            if child <= start:
                 break
-            total += starts[j] == starts[i] + 3
+            total += child == start + 3
     return total
+
+
+def shuffle_exchanges(plan: str) -> int:
+    """Shuffle exchange nodes in a plan's tree string. A reused exchange
+    prints as one ``ReusedExchange [...], Exchange ...`` node and runs no
+    new shuffle, and a broadcast prints as ``BroadcastExchange``: only
+    nodes whose text starts with ``Exchange`` count."""
+    return sum(text.startswith("Exchange ") for _, text in _nodes(plan))
 
 
 def main() -> None:
@@ -136,7 +154,7 @@ def main() -> None:
                     break
         rows.append((
             name,
-            plan.count("Exchange") - plan.count("BroadcastExchange"),
+            shuffle_exchanges(plan),
             plan.count("BroadcastHashJoin"),
             plan.count("SortMergeJoin"),
             # Spark 4 marks codegen stages as "*(n)" in toString

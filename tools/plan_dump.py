@@ -20,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hops_spark.io.readers import load_table
 from hops_spark.registry import load_all
 from hops_spark.session import get_spark
 
@@ -39,7 +40,7 @@ def main() -> None:
     specs = load_all()
     spark = get_spark("plan-dump")
     # warm the JVM/Arrow pool the same way bench.py does
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    load_table(spark, sf_dir, "region").count()
     spark.range(32).mapInPandas(lambda it: it, "id long") \
          .write.format("noop").mode("overwrite").save()
     for name in names:
