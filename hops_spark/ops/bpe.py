@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hops_spark.ops.text import words
+from hops_spark.ops.text import window_starts, words
 
 
 def vocab_symbols(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -46,11 +46,10 @@ def vocab_symbols(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _pair_counts(vocab: DataFrame) -> DataFrame:
     s = F.split("sym", " ")
-    pairs = F.when(F.size(s) >= 2, F.transform(
-        F.sequence(F.lit(1), F.size(s) - 1),
+    pairs = F.transform(
+        window_starts(s, 2),
         lambda i: F.struct(F.element_at(s, i).alias("w1"),
                            F.element_at(s, i + 1).alias("w2")))
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     return (vocab.select(F.col("n"), F.explode(pairs).alias("p"))
                  .groupBy("p.w1", "p.w2")
                  .agg(F.sum("n").alias("pair_count")))

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hops_spark.ops.text import shingles, words  # noqa: F401  (shingles: API re-export)
+from hops_spark.ops.text import bound_words, window_starts, words
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -72,23 +72,15 @@ def shingle_arrays(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     """(id, shingle_arr) with the per-doc DISTINCT word-n-gram set as one
     array column — the dedup substrate, built with ZERO shuffles.
 
-    The words array is materialized through a Generate barrier
-    (``explode(array(words))``): CollapseProject cannot inline the
-    split across a generator, so the lambda that builds each shingle
-    references the bound `_w` attribute instead of re-evaluating
-    ``split(lower(text))`` per element (~4.5× slower, measured at
-    sf0.1). Per-doc distinct is ``array_distinct`` in the same
+    Shingles are the ``window_starts`` windows of the ``bound_words``
+    array. Per-doc distinct is ``array_distinct`` in the same
     projection — replacing a dropDuplicates shuffle of every shingle
     row, which at 100 TB is the difference between a map-only stage
     and shuffling the whole exploded corpus."""
-    wdf = (fan_out(df, id_col)
-           .select(F.col(id_col), F.explode(F.array(words(text_col))).alias("_w")))
-    # sequence(1, 0) counts DOWN, so short docs need the explicit branch
-    idx = F.when(F.size("_w") >= shingle_n,
-                 F.sequence(F.lit(1), F.size("_w") - (shingle_n - 1))
-                 ).otherwise(F.array().cast("array<int>"))
+    wdf = bound_words(fan_out(df, id_col), id_col, text_col=text_col)
     arr = F.array_distinct(F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice("_w", i, shingle_n))))
+        window_starts("_w", shingle_n),
+        lambda i: F.concat_ws(" ", F.slice("_w", i, shingle_n))))
     return wdf.select(F.col(id_col), arr.alias("shingle_arr"))
 
 
@@ -495,8 +487,8 @@ def duplicate_spans(df: DataFrame, id_col: str = "doc_id",
     removes substrings of >= 50 tokens occurring twice; a suffix array
     does not distribute, k-gram fingerprints do).
 
-    Plan: one map-only pass emits (doc, pos, md5(k-gram)) through a
-    Generate barrier; one aggregate counts gram occurrences (map-side
+    Plan: one map-only pass emits (doc, pos, md5(k-gram)) from
+    ``_gram_rows``; one aggregate counts gram occurrences (map-side
     partial); a LEFT SEMI join keeps duplicated positions (semi joins
     never blow up on hot grams — a boilerplate gram selects positions,
     it cannot multiply them); a per-doc window merges stride-1 runs into
@@ -509,7 +501,8 @@ def duplicate_spans(df: DataFrame, id_col: str = "doc_id",
     [span_start, span_end] (0-based, inclusive; span_tokens = length)
     that a cleaning pass would cut.
     """
-    g = _gram_rows(df, id_col, text_col, k)
+    g = _gram_rows(df, id_col, text_col, k).select(
+        id_col, "pos", F.md5("g").alias("h"))
     hot = (g.groupBy("h").agg(F.count("*").alias("_cnt"))
             .filter(F.col("_cnt") >= min_count)
             .select("h"))
@@ -518,25 +511,20 @@ def duplicate_spans(df: DataFrame, id_col: str = "doc_id",
 
 def _gram_rows(df: DataFrame, id_col: str, text_col: str,
                k: int) -> DataFrame:
-    """(id, pos, h) — one md5 k-gram fingerprint per token position.
-    Generate barrier: bind the words array ONCE (explode of a
-    1-element array), then build grams against the bound attribute —
-    otherwise CollapseProject inlines split(lower(text)) into every
-    slice and the text re-splits per gram (same idiom as
-    shingle_arrays; measured ~3x at sf0.1)."""
-    bound = df.select(F.col(id_col),
-                      F.explode(F.array(words(text_col))).alias("_w"))
+    """(id, pos, g) — one EXACT k-token gram string per token position
+    (0-based ``pos``; whitespace-joined, injective over
+    whitespace-split tokens): the ``window_starts`` windows of the
+    ``bound_words`` array. The exact-key consumers join on ``g``; the
+    fingerprint consumers key on ``md5(g)``."""
     w = F.col("_w")
-    starts = F.when(F.size(w) >= k,
-                    F.sequence(F.lit(1), F.size(w) - (k - 1))
-                    ).otherwise(F.array().cast("array<int>"))
-    gram = F.transform(starts,
+    gram = F.transform(window_starts(w, k),
                        lambda i: F.struct(
                            (i - 1).cast("long").alias("pos"),
-                           F.md5(F.concat_ws(" ", F.slice(w, i, k))).alias("h")))
-    return (bound.select(F.col(id_col), F.explode(gram).alias("g"))
-                 .select(id_col, F.col("g.pos").alias("pos"),
-                         F.col("g.h").alias("h")))
+                           F.concat_ws(" ", F.slice(w, i, k)).alias("g")))
+    return (bound_words(df, id_col, text_col=text_col)
+            .select(F.col(id_col), F.explode(gram).alias("x"))
+            .select(id_col, F.col("x.pos").alias("pos"),
+                    F.col("x.g").alias("g")))
 
 
 def _gram_islands(dup: DataFrame, id_col: str, k: int) -> DataFrame:
@@ -576,8 +564,10 @@ def contamination_spans(corpus: DataFrame, benchmark: DataFrame,
     multiplies), per-doc islands window — the duplicate_spans shuffle
     shape exactly; at the 10^8-shingle benchmark scale the
     decontaminate_bloom bitmask composes in front of the semi join."""
-    g = _gram_rows(corpus, id_col, text_col, k)
-    bg = _gram_rows(benchmark, id_col, text_col, k).select("h").distinct()
+    g = _gram_rows(corpus, id_col, text_col, k).select(
+        id_col, "pos", F.md5("g").alias("h"))
+    bg = (_gram_rows(benchmark, id_col, text_col, k)
+          .select(F.md5("g").alias("h")).distinct())
     flagged = g.join(bg, "h", "left_semi")
     return (_gram_islands(flagged, id_col, k)
             .filter(F.col("span_tokens") >= min_tokens))
@@ -668,9 +658,7 @@ def suffix_dup_spans(df: DataFrame, id_col: str = "doc_id",
     if prefix_cap < min_tokens:
         raise ValueError("prefix_cap must be >= min_tokens")
     L, C = min_tokens, prefix_cap
-    bound = (fan_out(df, id_col)
-             .select(F.col(id_col),
-                     F.explode(F.array(words(text_col))).alias("_w")))
+    bound = bound_words(fan_out(df, id_col), id_col, text_col=text_col)
     if dict_encode is None:
         # cheap ESTIMATE, not an exact token count: a narrow id-only
         # count plus a 256-doc probe of tokens/doc and chars/token (an
@@ -702,13 +690,10 @@ def suffix_dup_spans(df: DataFrame, id_col: str = "doc_id",
                          F.transform("_pc", lambda s: s["_code"])
                           .alias("_w")))
     w = F.col("_w")
-    starts = F.when(F.size(w) >= L,
-                    F.sequence(F.lit(1), F.size(w) - (L - 1))
-                    ).otherwise(F.array().cast("array<int>"))
     suf = (bound.select(
                F.col(id_col),
                F.explode(F.transform(
-                   starts,
+                   window_starts(w, L),
                    lambda i: F.struct((i - 1).cast("long").alias("pos"),
                                       F.slice(w, i, C).alias("skey"))))
                 .alias("s"))
@@ -788,27 +773,6 @@ def _interval_islands(dup: DataFrame, id_col: str) -> DataFrame:
                .select(id_col, "span_start", "span_end", "span_tokens"))
 
 
-def _exact_gram_rows(df: DataFrame, id_col: str, text_col: str,
-                     L: int) -> DataFrame:
-    """(id, pos, g) — one EXACT L-token gram string per position
-    (whitespace-joined, injective over whitespace-split tokens); the
-    collision-free twin of ``_gram_rows``' md5 fingerprints. Same
-    Generate-barrier idiom so the text tokenizes once."""
-    bound = df.select(F.col(id_col),
-                      F.explode(F.array(words(text_col))).alias("_w"))
-    w = F.col("_w")
-    starts = F.when(F.size(w) >= L,
-                    F.sequence(F.lit(1), F.size(w) - (L - 1))
-                    ).otherwise(F.array().cast("array<int>"))
-    gram = F.transform(starts,
-                       lambda i: F.struct(
-                           (i - 1).cast("long").alias("pos"),
-                           F.concat_ws(" ", F.slice(w, i, L)).alias("g")))
-    return (bound.select(F.col(id_col), F.explode(gram).alias("x"))
-                 .select(id_col, F.col("x.pos").alias("pos"),
-                         F.col("x.g").alias("g")))
-
-
 def contamination_attribution(corpus: DataFrame, benchmark: DataFrame,
                               id_col: str = "doc_id",
                               text_col: str = "text",
@@ -831,9 +795,9 @@ def contamination_attribution(corpus: DataFrame, benchmark: DataFrame,
     (bench_id, n_corpus_docs, n_shared_grams) for contaminated
     benchmark docs only."""
     L = min_tokens
-    bg = (_exact_gram_rows(benchmark, id_col, text_col, L)
+    bg = (_gram_rows(benchmark, id_col, text_col, L)
           .select(F.col(id_col).alias("bench_id"), "g").distinct())
-    cd = (_exact_gram_rows(corpus, id_col, text_col, L)
+    cd = (_gram_rows(corpus, id_col, text_col, L)
           .select(F.col(id_col).alias("corpus_id"), "g").distinct())
     docs = (bg.join(cd, "g")
               .select("bench_id", "corpus_id").distinct()
@@ -890,8 +854,8 @@ def contamination_exact_spans(corpus: DataFrame, benchmark: DataFrame,
     Returns (id, span_start, span_end, span_tokens) — excise_spans
     composes directly."""
     L = min_tokens
-    cg = _exact_gram_rows(corpus, id_col, text_col, L)
-    bg = _exact_gram_rows(benchmark, id_col, text_col, L) \
+    cg = _gram_rows(corpus, id_col, text_col, L)
+    bg = _gram_rows(benchmark, id_col, text_col, L) \
         .select("g").distinct()
     if bloom_m is not None:
         from hops_spark.ops.bloom import bloom_bitmask, bloom_join_filter
@@ -928,9 +892,8 @@ def excise_spans(df: DataFrame, spans: DataFrame,
                .agg(F.sort_array(F.collect_list(F.struct(
                    F.col("span_start").alias("s"),
                    F.col("span_end").alias("e")))).alias("_sp")))
-    bound = (df.join(sp, id_col, "left")
-               .select(F.col(id_col), F.col("_sp"),
-                       F.explode(F.array(words(text_col))).alias("_w")))
+    bound = bound_words(df.join(sp, id_col, "left"), id_col, "_sp",
+                        text_col=text_col)
     w, spn = F.col("_w"), F.coalesce(
         F.col("_sp"), F.array().cast("array<struct<s:long,e:long>>"))
     idx = F.when(F.size(w) > 0, F.sequence(F.lit(0), F.size(w) - 1)

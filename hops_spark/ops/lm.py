@@ -33,30 +33,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hops_spark.ops.text import words
+from hops_spark.ops.text import bound_words, window_starts, words
 
 MICRO = 1_000_000
 
 
-def bigram_rows(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text",
-                carry: tuple[str, ...] = ()) -> DataFrame:
-    """(id, *carry, w1, w2) — one row per adjacent token pair. The
-    words array is bound behind a Generate barrier (explode of a
-    1-element array) so the split runs once per doc, not once per
-    element_at (the CollapseProject trap shingle_arrays documents).
+def ngram_rows(docs: DataFrame, n: int, id_col: str = "doc_id",
+               text_col: str = "text",
+               carry: tuple[str, ...] = ()) -> DataFrame:
+    """(id, *carry, w1, ..., wn) — one row per ``n`` adjacent tokens:
+    the ``window_starts`` windows of the ``bound_words`` array.
     ``carry`` columns ride along unchanged (see doc_bigram_counts)."""
-    bound = docs.select(F.col(id_col), *[F.col(c) for c in carry],
-                        F.explode(F.array(words(text_col))).alias("_w"))
     w = F.col("_w")
-    pairs = F.when(F.size(w) >= 2, F.transform(
-        F.sequence(F.lit(1), F.size(w) - 1),
-        lambda i: F.struct(F.element_at(w, i).alias("w1"),
-                           F.element_at(w, i + 1).alias("w2")))
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    return (bound.select(F.col(id_col), *[F.col(c) for c in carry],
-                         F.explode(pairs).alias("b"))
-                 .select(id_col, *carry, "b.w1", "b.w2"))
+    ws = [f"w{j + 1}" for j in range(n)]
+    grams = F.transform(
+        window_starts(w, n),
+        lambda i: F.struct(*[F.element_at(w, i + j).alias(c)
+                             for j, c in enumerate(ws)]))
+    keep = [id_col, *carry]
+    return (bound_words(docs, *keep, text_col=text_col)
+            .select(*keep, F.explode(grams).alias("b"))
+            .select(id_col, *carry, *[f"b.{c}" for c in ws]))
 
 
 def doc_bigram_counts(docs: DataFrame, id_col: str = "doc_id",
@@ -73,7 +70,7 @@ def doc_bigram_counts(docs: DataFrame, id_col: str = "doc_id",
     count — so a per-DOMAIN consumer can aggregate directly instead of
     re-joining the doc table for the label (guide §2.4: one fewer
     shuffle + one fewer scan)."""
-    return (bigram_rows(docs, id_col, text_col, carry)
+    return (ngram_rows(docs, 2, id_col, text_col, carry)
             .groupBy(id_col, *carry, "w1", "w2")
             .agg(F.count("*").alias("n_local")))
 
@@ -249,33 +246,13 @@ def kn_scored_counts(tbl: DataFrame) -> DataFrame:
                f" * {MICRO}, 0) AS BIGINT)"))
 
 
-def trigram_rows(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """(id, w1, w2, w3) — one row per adjacent token triple. Same
-    Generate-barrier + size-guard discipline as bigram_rows (Spark's
-    sequence(1, 0) is DESCENDING, not empty — docs under three words
-    must short-circuit to an empty array)."""
-    bound = docs.select(F.col(id_col),
-                        F.explode(F.array(words(text_col))).alias("_w"))
-    w = F.col("_w")
-    triples = F.when(F.size(w) >= 3, F.transform(
-        F.sequence(F.lit(1), F.size(w) - 2),
-        lambda i: F.struct(F.element_at(w, i).alias("w1"),
-                           F.element_at(w, i + 1).alias("w2"),
-                           F.element_at(w, i + 2).alias("w3")))
-    ).otherwise(F.array().cast(
-        "array<struct<w1:string,w2:string,w3:string>>"))
-    return (bound.select(F.col(id_col), F.explode(triples).alias("t"))
-                 .select(id_col, "t.w1", "t.w2", "t.w3"))
-
-
 def trigram_count_table(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text") -> DataFrame:
     """Corpus trigram counts (w1, w2, w3, n) — the single
     corpus-proportional aggregate every KN-trigram statistic derives
     from (KenLM discipline: all lower-order stats are TYPE counts of
     this table, never a second corpus pass)."""
-    return (trigram_rows(docs, id_col, text_col)
+    return (ngram_rows(docs, 3, id_col, text_col)
             .groupBy("w1", "w2", "w3")
             .agg(F.count("*").cast("long").alias("n")))
 
@@ -474,7 +451,7 @@ def kn3_doc_scores(docs: DataFrame, prune3: int = 2,
     and (w1,w2) a prefix context by construction, so the double-
     backoff branch only fires for OUT-of-corpus text — the branch is
     total anyway. Integer micro-nat sums; order-free."""
-    per = (trigram_rows(docs, id_col, text_col)
+    per = (ngram_rows(docs, 3, id_col, text_col)
            .groupBy(id_col, "w1", "w2", "w3")
            .agg(F.count("*").cast("long").alias("n_local")))
     per = per.localCheckpoint(eager=True)   # feeds the model AND scoring
@@ -545,7 +522,7 @@ def kn3_heldout_scores(train_docs: DataFrame, test_docs: DataFrame,
     n_backoff/n_oov per doc make the miss rates auditable."""
     arpa = kn3_arpa(trigram_count_table(train_docs, id_col, text_col),
                     prune3=prune3)
-    per = (trigram_rows(test_docs, id_col, text_col)
+    per = (ngram_rows(test_docs, 3, id_col, text_col)
            .groupBy(id_col, "w1", "w2", "w3")
            .agg(F.count("*").cast("long").alias("n_local")))
     return kn3_score_docs(per, arpa, id_col)

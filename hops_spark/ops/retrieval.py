@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hops_spark.ops.text import words
+from hops_spark.ops.text import bound_words, window_starts, words
 
 K1 = 1.2
 B = 0.75
@@ -100,31 +100,21 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
                   .limit(k))
 
 
-def _bound_words(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """(id, _w): the words array bound behind a Generate barrier
-    (explode of a 1-element array) — CollapseProject would otherwise
-    inline split(lower(text)) into EVERY element_at downstream: 4
-    re-splits per pair, measured 25 s -> ~2 s at sf0.1 (same trap
-    shingle_arrays documents)."""
-    return docs.select(F.col(id_col),
-                       F.explode(F.array(words(text_col))).alias("_w"))
-
-
 def cooccurrence_edges(bound: DataFrame, window: int = 2) -> DataFrame:
-    """(word_a, word_b, n_cooc) pair counts over a ``_bound_words``
-    frame: per-doc unordered within-``window`` pairs built ARRAY-SIDE,
-    one map-side-combined count aggregate — the shared edge source for
-    cooccurrence_topk and the co-occurrence graph ops."""
+    """(word_a, word_b, n_cooc) pair counts over a ``bound_words``
+    frame: per-doc unordered within-``window`` pairs built ARRAY-SIDE
+    (each ``window_starts`` pair start i pairs with the next
+    ``window`` tokens), one map-side-combined count aggregate — the
+    shared edge source for cooccurrence_topk and the co-occurrence
+    graph ops."""
     w = F.col("_w")
-    pair_structs = F.when(F.size(w) >= 2, F.flatten(F.transform(
-        F.sequence(F.lit(1), F.size(w) - 1),
+    pair_structs = F.flatten(F.transform(
+        window_starts(w, 2),
         lambda i: F.transform(
             F.sequence(F.lit(1), F.least(F.lit(window), F.size(w) - i)),
             lambda d: F.struct(
                 F.least(F.element_at(w, i), F.element_at(w, i + d)).alias("a"),
-                F.greatest(F.element_at(w, i), F.element_at(w, i + d)).alias("b"))))
-    )).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
+                F.greatest(F.element_at(w, i), F.element_at(w, i + d)).alias("b")))))
     pairs = (bound.select(F.explode(pair_structs).alias("p"))
                   .select(F.col("p.a").alias("word_a"),
                           F.col("p.b").alias("word_b")))
@@ -138,14 +128,14 @@ def cooccurrence_topk(docs: DataFrame, window: int = 2, k: int = 20,
     pattern (public: Lin & Dyer, "Data-Intensive Text Processing with
     MapReduce", ch.3) — re-expressed map-only: the per-doc pair list
     (unordered word pairs within ``window`` tokens) is built ARRAY-SIDE
-    behind a Generate barrier, so the only shuffles are the pair-count
+    over the ``bound_words`` array, so the only shuffles are the pair-count
     aggregate and the tiny unigram aggregate (both map-side combined).
     The reference idiom shuffles one record per pair occurrence; this
     shuffles one record per distinct pair per partition.
 
     Returns the k most frequent pairs with an overlap-coefficient
     affinity (cooc/min(unigram counts)) in exact integer ppm."""
-    bound = _bound_words(docs, id_col, text_col)
+    bound = bound_words(docs, id_col, text_col=text_col)
     cnt = cooccurrence_edges(bound, window)
     uni = (bound.select(F.explode(F.col("_w")).alias("word"))
                 .groupBy("word").agg(F.count("*").alias("c")))
@@ -190,7 +180,7 @@ def pmi_topk(docs: DataFrame, window: int = 2, k: int = 20,
     Plan: one pair-count aggregate (map-side combined), one marginal
     aggregate over the pair table, two broadcast joins, TakeOrdered
     top-k. Nothing corpus-proportional past the first aggregate."""
-    bound = _bound_words(docs, id_col, text_col)
+    bound = bound_words(docs, id_col, text_col=text_col)
     cnt = cooccurrence_edges(bound, window).filter(F.col("n_cooc") >= min_cooc)
     marg = (cnt.select(F.col("word_a").alias("word"), "n_cooc")
                .unionByName(cnt.select(F.col("word_b").alias("word"),
@@ -353,34 +343,25 @@ def phrase_occurrences(docs: DataFrame, phrase: list[str],
     contains(text, phrase[0]) would push into the parquet scan.
 
     Returns (id, n_occ, first_pos) for documents containing the phrase
-    (positions 1-based). Tokenization = ops/text.words (the repo-wide
-    contract the DuckDB oracle mirrors)."""
+    (positions 1-based): the ``window_starts`` of the ``bound_words``
+    array whose window spells the phrase. Tokenization = ops/text.words
+    (the repo-wide contract the DuckDB oracle mirrors)."""
     from functools import reduce
 
-    from hops_spark.ops.text import words
-
     n = len(phrase)
-    # Generate barrier: bind the words array once so element_at doesn't
-    # re-split the text per probe (the ngram_lm_counts pattern).
-    bound = docs.select(F.col(id_col),
-                        F.explode(F.array(words(text_col))).alias("_w"))
     w = F.col("_w")
-    starts = F.when(
-        F.size(w) >= n,
-        F.sequence(F.lit(1), F.size(w) - n + 1)
-    ).otherwise(F.array().cast("array<int>"))
 
     def hit(i):
         return reduce(lambda a, b: a & b,
                       [F.element_at(w, i + j) == phrase[j]
                        for j in range(n)])
 
-    hits = F.filter(starts, hit)
-    return (bound.select(F.col(id_col),
-                         F.size(hits).cast("long").alias("n_occ"),
-                         F.element_at(hits, 1).cast("long")
-                          .alias("first_pos"))
-                 .filter(F.col("n_occ") >= 1))
+    hits = F.filter(window_starts(w, n), hit)
+    return (bound_words(docs, id_col, text_col=text_col)
+            .select(F.col(id_col),
+                    F.size(hits).cast("long").alias("n_occ"),
+                    F.element_at(hits, 1).cast("long").alias("first_pos"))
+            .filter(F.col("n_occ") >= 1))
 
 
 # --- hybrid retrieval: reciprocal-rank fusion -----------------------------

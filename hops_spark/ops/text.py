@@ -6,12 +6,12 @@ op is deterministic so the DuckDB oracle can reproduce it exactly.
 
 - ``tokens`` / ``token_count``: whitespace tokenizer + a BPE-ish
   word/number/punct regex tokenizer.
-- ``shingles``: word n-gram shingling (the dedup primitive).
+- ``bound_words`` / ``window_starts``: the word-window primitive every
+  n-gram emitter (shingles, k-grams, LM rows, co-occurrence, phrase
+  search) is built from.
 - ``quality_features`` / ``quality_score``: length / punctuation /
   stopword / repetition heuristics (Gopher/C4-style rules, public).
 - ``lang_id_expr``: stopword-overlap language heuristic (en/de/fr/es).
-- ``fingerprint``: deterministic document fingerprint (md5 over the
-  sorted distinct shingle set → stable under word order).
 """
 
 from __future__ import annotations
@@ -46,15 +46,31 @@ def token_count(text: Column | str, mode: str = "ws") -> Column:
     return F.size(words(text) if mode == "ws" else tokens_bpeish(text))
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles of the lowercased text, as an array<string>.
-    Docs shorter than n words yield an empty array. (Guarded: Spark's
-    sequence(1,0) counts DOWN, so short docs need the explicit branch.)"""
-    w = words(text)
-    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    return F.when(F.size(w) >= n,
-                  F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, n)))
-                  ).otherwise(F.array().cast("array<string>"))
+def bound_words(df: DataFrame, *keep: Column | str,
+                text_col: str = "text") -> DataFrame:
+    """``df.select(*keep, _w)`` where ``_w`` is the words array of
+    ``text_col``, bound behind a Generate barrier (explode of a
+    1-element array). CollapseProject cannot inline a projection across
+    a generator, so every downstream lambda reads the bound ``_w``
+    attribute instead of re-evaluating ``split(lower(text))`` per
+    element — higher-order lambdas are interpreted, and the unbound
+    form measured 3x to 12x slower at sf0.1 (shingles ~4.5x, k-grams
+    ~3x, co-occurrence pairs 25 s -> ~2 s)."""
+    return df.select(*keep, F.explode(F.array(words(text_col))).alias("_w"))
+
+
+def window_starts(arr: Column | str, n: int) -> Column:
+    """The 1-based start of every ``n``-long window of ``arr``, as
+    array<int>; empty when ``arr`` is shorter than ``n``. The guard is
+    load-bearing: Spark's ``sequence(1, 0)`` counts DOWN to ``[1, 0]``,
+    it is not empty. Sites build windows with
+    ``F.transform(window_starts(w, n), form)`` or select them with
+    ``F.filter(window_starts(w, n), hit)``, so the empty branch never
+    needs the element type of the windows."""
+    a = F.col(arr) if isinstance(arr, str) else arr
+    return F.when(F.size(a) >= n,
+                  F.sequence(F.lit(1), F.size(a) - (n - 1))
+                  ).otherwise(F.array().cast("array<int>"))
 
 
 PPM = 1_000_000  # ratios are exact integer parts-per-million: floating-point
@@ -64,16 +80,11 @@ PPM = 1_000_000  # ratios are exact integer parts-per-million: floating-point
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality features (C4/Gopher-style, all public rules).
-    Ratios are integer ppm (see PPM note).
-
-    The words array goes through a Generate barrier
-    (``explode(array(words))``) so the split is evaluated once per doc
-    and the word-level signals (count, stopword filter, distinct) read
-    the bound `_w` attribute — higher-order lambdas are interpreted, so
-    letting CollapseProject inline the split into them re-tokenizes the
-    document per signal."""
+    Ratios are integer ppm (see PPM note). The word-level signals
+    (count, stopword filter, distinct) read the ``bound_words`` array,
+    so the document is split once."""
     t = F.col(text_col)
-    d = df.select("*", F.explode(F.array(words(t))).alias("_w"))
+    d = bound_words(df, "*", text_col=text_col)
     n_words = F.size("_w")
     n_chars = F.length(t)
     d = d.withColumns({
@@ -124,14 +135,6 @@ def lang_id_expr(text_col: str = "text") -> Column:
     for lang in reversed(list(STOPWORDS)):
         expr = F.when((hits[lang] > 0) & (hits[lang] == best), F.lit(lang)).otherwise(expr)
     return expr
-
-
-def fingerprint(text_col: str = "text", n: int = 3) -> Column:
-    """Order-insensitive document fingerprint: md5 of the sorted distinct
-    shingle set. Equal fingerprints ⇔ same shingle multiset-as-set —
-    a cheap exact-ish dedup key robust to duplicated paragraphs."""
-    sh = F.array_sort(F.array_distinct(shingles(text_col, n)))
-    return F.md5(F.concat_ws("\x1f", sh))
 
 
 # --- PII scrubbing (training-data hygiene; superset of reference §2.7
@@ -194,21 +197,11 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     run costs one scan."""
     lines = F.filter(F.split(F.col(text_col), "\n"),
                      lambda x: F.trim(x) != "")
-    wrds = words(F.col(text_col))
-    # word bigrams via index-transform over the words array (the words
-    # array is a bound attribute below, so no re-evaluation per element).
-    # Size guard: sequence(1, 0) is DESCENDING [1, 0] in Spark, so a
-    # doc with < 2 words would hit element_at index 0/2 without it.
-    bg = F.when(
-        F.size("_w") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_w") - 1),
-            lambda i: F.concat_ws(" ", F.element_at("_w", i),
-                                  F.element_at("_w", i + F.lit(1))))
-    ).otherwise(F.array().cast("array<string>"))
-    base = (df.select(F.col(id_col),
-                      F.explode(F.array(wrds)).alias("_w"),
-                      lines.alias("_lines"))
+    bg = F.transform(window_starts("_w", 2),
+                     lambda i: F.concat_ws(" ", F.element_at("_w", i),
+                                           F.element_at("_w", i + F.lit(1))))
+    base = (bound_words(df, id_col, lines.alias("_lines"),
+                        text_col=text_col)
               .select(id_col, "_lines", bg.alias("_bg")))
     return (base.withColumn("n_lines", F.size("_lines").cast("long"))
                 .withColumn("_dl", (F.size("_lines")
@@ -242,12 +235,11 @@ def top_ngram_chars(df: DataFrame, id_col: str = "doc_id",
 
     Plan: one (doc, n, gram) explode → count aggregate → per-(doc, n)
     argmin of struct(-count, gram) → pivot to columns → broadcast-less
-    join back to the per-doc length frame on the same id key. Gram
-    construction is array-side Column arithmetic (map-only); at 100 TB
-    the cost is the one keyed count aggregate per n."""
+    join back to the per-doc length frame on the same id key. Grams are
+    ``window_starts`` windows over the ``bound_words`` array (map-only);
+    at 100 TB the cost is the one keyed count aggregate per n."""
     thresholds = {2: 200_000, 3: 180_000, 4: 160_000}
-    base = (df.select(F.col(id_col),
-                      F.explode(F.array(words(text_col))).alias("_w"))
+    base = (bound_words(df, id_col, text_col=text_col)
               .withColumn("_len",
                           F.length(F.concat_ws(" ", F.col("_w")))
                            .cast("long")))
@@ -255,16 +247,11 @@ def top_ngram_chars(df: DataFrame, id_col: str = "doc_id",
     def _grams(n: int):
         # closure, not a default arg: F.transform reads the lambda's
         # ARITY to decide (element) vs (element, index) — a second
-        # parameter would receive the index Column. The size guard is
-        # load-bearing: Spark's sequence(1, 0) is DESCENDING [1, 0],
-        # not empty, so a doc shorter than n words would index out of
-        # bounds without it.
-        g = F.transform(
-            F.sequence(F.lit(1), F.size("_w") - (n - 1)),
+        # parameter would receive the index Column.
+        return F.transform(
+            window_starts("_w", n),
             lambda i: F.concat_ws(
                 " ", *[F.element_at("_w", i + F.lit(j)) for j in range(n)]))
-        return F.when(F.size("_w") >= n, g) \
-                .otherwise(F.array().cast("array<string>"))
 
     def _tagged(n: int):
         return F.transform(_grams(n),
@@ -305,15 +292,14 @@ def chunk_documents(df: DataFrame, id_col: str = "doc_id",
     ``overlap`` tokens carried between consecutive chunks (stride =
     chunk_tokens − overlap; the last partial chunk is kept).
 
-    All array-side behind a Generate barrier (split once per doc), then
-    one explode — map-only, no shuffle; at 100 TB this is a scan, and
+    All array-side over the ``bound_words`` array (split once per doc),
+    then one explode — map-only, no shuffle; at 100 TB this is a scan, and
     chunk rows inherit the input partitioning for the downstream
     tokenizer. Output: (id, chunk_id, n_tokens, chunk_text)."""
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
-    wdf = (df.select(F.col(id_col),
-                     F.explode(F.array(words(F.col(text_col)))).alias("_w"))
+    wdf = (bound_words(df, id_col, text_col=text_col)
              .filter(F.size("_w") > 0))
     n_chunks = F.greatest(
         F.ceil((F.size("_w") - F.lit(overlap)) / F.lit(stride)), F.lit(1)) \
@@ -402,8 +388,7 @@ def chunk_token_windows(docs: DataFrame, id_col: str = "doc_id",
     the document end). Empty docs produce no chunks."""
     if stride < 1 or window < 1:
         raise ValueError(f"window/stride must be >= 1, got {window}/{stride}")
-    wdf = (docs.select(F.col(id_col),
-                       F.explode(F.array(words(text_col))).alias("_w"))
+    wdf = (bound_words(docs, id_col, text_col=text_col)
                .filter(F.size("_w") > 0)
                .withColumn("_n", F.size("_w").cast("long")))
     n_chunks = (F.when(F.col("_n") <= window, F.lit(1).cast("long"))

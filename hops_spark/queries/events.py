@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hops_spark.io.readers import load_table
+from hops_spark.ops.text import window_starts
 from hops_spark.registry import register
 
 SESSION_GAP_MIN = 30
@@ -382,7 +383,7 @@ PATH_TOP = 20
         "fix the pattern up front): per-user event-type sequences in "
         "exact (ts, event_id) order — sort_array canonicalizes the "
         "collect, so partition order never leaks — sliding 3-grams via "
-        "the size-guarded index transform, corpus-wide counts + share "
+        "ops/text.window_starts, corpus-wide counts + share "
         "ppm, top-20 with a lexicographic tie-break. One keyed shuffle "
         "to assemble sequences, map-side gram explode, one count "
         "aggregate. Scale note: the per-user array is the standard "
@@ -398,14 +399,10 @@ def event_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.collect_list(F.struct("ts", "event_id", "event_type")))
                  .alias("evs"))
             .select(F.expr("transform(evs, x -> x.event_type)").alias("w")))
-    grams = F.when(
-        F.size("w") >= PATH_N,
-        F.transform(
-            F.sequence(F.lit(1), F.size("w") - (PATH_N - 1)),
-            lambda i: F.concat_ws(
-                ">", *[F.element_at("w", i + F.lit(j))
-                       for j in range(PATH_N)]))
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.transform(
+        window_starts("w", PATH_N),
+        lambda i: F.concat_ws(
+            ">", *[F.element_at("w", i + F.lit(j)) for j in range(PATH_N)]))
     g = seq.select(F.explode(grams).alias("path"))
     cnt = g.groupBy("path").agg(F.count("*").cast("long").alias("n"))
     # total from the path-bounded aggregate, NOT a second pass over g

@@ -338,9 +338,9 @@ def basket_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("examples", "graph"),
 )
 def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hops_spark.ops.lm import bigram_rows
+    from hops_spark.ops.lm import ngram_rows
     d = load_table(spark, sf_dir, "documents")
-    bg = bigram_rows(d).where(F.col("w1") != F.col("w2"))
+    bg = ngram_rows(d, 2).where(F.col("w1") != F.col("w2"))
     edges = (bg.select(F.least("w1", "w2").alias("a"),
                        F.greatest("w1", "w2").alias("b"))
                .distinct().localCheckpoint(eager=True))

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from hops_spark.io.readers import load_table
 from hops_spark.ops.graph import pagerank_int
-from hops_spark.ops.lm import bigram_rows
+from hops_spark.ops.lm import ngram_rows
 from hops_spark.queries.textops import _DUCK_WORDS
 from hops_spark.registry import register
 
@@ -263,7 +263,7 @@ def pagerank_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see ops/graph.pagerank_int). The 3-iteration unroll is mirrored in
     the oracle as chained CTEs."""
     d = load_table(spark, sf_dir, "documents")
-    edges = (bigram_rows(d).where(F.col("w1") != F.col("w2"))
+    edges = (ngram_rows(d, 2).where(F.col("w1") != F.col("w2"))
                            .select(F.col("w1").alias("src"),
                                    F.col("w2").alias("dst")))
     pr = pagerank_int(edges, iters=_PR_ITERS)

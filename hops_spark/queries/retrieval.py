@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from hops_spark.io.readers import load_table
 from hops_spark.ops import retrieval as R
 from hops_spark.ops.sketch import HLL_HASH_BITS, KMV_DOMAIN
+from hops_spark.ops.text import bound_words
 from hops_spark.queries.textops import _DUCK_WORDS
 from hops_spark.registry import register
 
@@ -159,26 +160,16 @@ def word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("retrieval", "text", "north-star"),
 )
 def ngram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hops_spark.ops.text import words
+    from hops_spark.ops.lm import ngram_rows
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Generate barrier: bind the words array once (explode of a
-    # 1-element array) so the split doesn't re-run per element_at.
-    bound = d.select(F.explode(F.array(words("text"))).alias("_w"))
-    w = F.col("_w")
-    bigram = F.when(F.size(w) >= 2, F.transform(
-        F.sequence(F.lit(1), F.size(w) - 1),
-        lambda i: F.struct(F.element_at(w, i).alias("w1"),
-                           F.element_at(w, i + 1).alias("w2")))
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    cnt = (bound.select(F.explode(bigram).alias("b"))
-                .select("b.w1", "b.w2")
-                .groupBy("w1", "w2").agg(F.count("*").alias("n"))
-                # consumed 3x (cont, tot, final join) and Catalyst does
-                # not unify the subtrees — cache the count table rather
-                # than re-aggregate the corpus per consumer (the table
-                # is bigram-vocab-bounded, orders smaller than the
-                # token stream; the standard LM count-table contract).
-                .cache())
+    cnt = (ngram_rows(d, 2)
+           .groupBy("w1", "w2").agg(F.count("*").alias("n"))
+           # consumed 3x (cont, tot, final join) and Catalyst does not
+           # unify the subtrees — cache the count table rather than
+           # re-aggregate the corpus per consumer (the table is
+           # bigram-vocab-bounded, orders smaller than the token
+           # stream; the standard LM count-table contract).
+           .cache())
     cont = cnt.groupBy("w2").agg(F.count("*").alias("n_cont"))
     tot = cnt.agg(F.sum("n").alias("total"))
     return (cnt.join(F.broadcast(cont), "w2")
@@ -1164,9 +1155,9 @@ TRI_TOP = 20
 )
 def triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hops_spark.ops.graph import triangle_rows
-    from hops_spark.ops.retrieval import _bound_words, cooccurrence_edges
+    from hops_spark.ops.retrieval import cooccurrence_edges
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    edges = (cooccurrence_edges(_bound_words(d), 2)
+    edges = (cooccurrence_edges(bound_words(d, "doc_id"), 2)
              .filter((F.col("n_cooc") >= TRI_MIN_COOC)
                      & (F.col("word_a") != F.col("word_b")))
              .select("word_a", "word_b"))
@@ -1673,7 +1664,7 @@ def _duck_bfs_round(prev: str, cur: str) -> str:
 def word_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hops_spark.ops.graph import bfs_distances
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bound = R._bound_words(d)
+    bound = bound_words(d, "doc_id")
     edges = (R.cooccurrence_edges(bound, window=2)
               .filter(F.col("n_cooc") >= R.MIN_COOC_PMI)
               .select(F.col("word_a").alias("src"),

@@ -93,7 +93,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q5_local_supplier_volume",
     sql="""
     SELECT n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+           CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(15,2))
+                          * (1 - CAST(l.l_discount AS DECIMAL(15,2)))), 2)
+                AS DOUBLE) AS revenue
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -107,7 +109,10 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "flagship"),
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped: 6-way join chain; dims broadcast, facts shuffle."""
+    """TPC-H Q5-shaped: 6-way join chain; dims broadcast, facts shuffle.
+    Revenue sums in DECIMAL(15,2), the TPC-H column type: a double sum
+    sitting at a half cent rounds by summation order (file layout,
+    partitioning), an exact decimal sum does not."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
@@ -121,8 +126,10 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
              .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
              .groupBy("n_name")
-             .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-                   .alias("revenue"))
+             .agg(F.round(F.sum(F.col("l_extendedprice").cast("decimal(15,2)")
+                                * (1 - F.col("l_discount").cast("decimal(15,2)"))),
+                          2)
+                   .cast("double").alias("revenue"))
              .orderBy(F.col("revenue").desc(), F.col("n_name")))
 
 

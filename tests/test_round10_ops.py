@@ -123,42 +123,6 @@ def test_two_tier_interval_join_bounds_replication(spark):
     assert got == naive and len(got) == len(set(got))
 
 
-def test_top_ngram_chars_hand_computed(spark):
-    """Exact ppm values on crafted docs: counts, the count-then-lexico
-    tie-break, the >1e6 overlap case, and the empty-gram fallback."""
-    from hops_spark.ops.text import top_ngram_chars
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b a"),   # len 9; top2 'a b'x2 (tie-break), top3 'a b a'x2
-         (2, "x"),           # no grams at any n
-         (3, "z z z z")],    # len 7; top2 'z z'x3 -> 9/7 > 1
-        "doc_id long, text string")
-    got = {r["doc_id"]: r for r in top_ngram_chars(docs).collect()}
-    assert got[1]["top2_ppm"] == 2 * 3 * 1_000_000 // 9      # 666666
-    assert got[1]["top3_ppm"] == 2 * 5 * 1_000_000 // 9      # 1111111 (>1e6)
-    assert got[1]["top4_ppm"] == 1 * 7 * 1_000_000 // 9
-    assert got[1]["keep"] is False
-    assert (got[2]["top2_ppm"], got[2]["top3_ppm"], got[2]["top4_ppm"]) \
-        == (0, 0, 0)
-    assert got[2]["keep"] is True
-    assert got[3]["top2_ppm"] == 3 * 3 * 1_000_000 // 7      # 1285714
-    assert got[3]["keep"] is False
-
-
-def test_repetition_stats_short_docs(spark):
-    """Regression: docs with < 2 words (sequence(1,0) is DESCENDING in
-    Spark, not empty) no longer crash the bigram transform."""
-    from hops_spark.ops.text import repetition_stats
-
-    docs = spark.createDataFrame(
-        [(1, "solo"), (2, ""), (3, "a a")],
-        "doc_id long, text string")
-    got = {r["doc_id"]: r for r in repetition_stats(docs).collect()}
-    assert got[1]["dup_bigram_ppm"] == 0
-    assert got[2]["dup_bigram_ppm"] == 0
-    assert got[3]["dup_bigram_ppm"] == 0    # one bigram, no dup
-
-
 def test_probe_calibration_bins_partition_and_bound(spark, tmp_path):
     """Bins tile [0, 1e6] (n sums to the doc count), per-bin empirical
     rate is n_pos/n in micro-units, and gap = |conf - emp| exactly."""

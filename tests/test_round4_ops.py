@@ -89,15 +89,6 @@ def test_tfidf_df_bounds_prune_terms(spark):
 
 # --- bigram LM ----------------------------------------------------------
 
-def test_lm_bigram_rows_and_count_table(spark):
-    docs = _docs(spark, [(0, "a b a b"), (1, "a")])
-    rows = {(r["w1"], r["w2"]) for r in LM.bigram_rows(docs).collect()}
-    assert rows == {("a", "b"), ("b", "a")}          # doc 1: no bigram
-    cnt = {(r["w1"], r["w2"]): (r["n"], r["n_ctx"])
-           for r in LM.bigram_count_table(docs).collect()}
-    assert cnt[("a", "b")] == (2, 2) and cnt[("b", "a")] == (1, 1)
-
-
 def test_lm_predictable_doc_scores_lower(spark):
     # Corpus dominated by "p q" repetitions: a doc made of the dominant
     # bigram must score a lower avg NLL than a doc of one-off bigrams.
